@@ -7,8 +7,9 @@ analyzed logical plan per round, and the failure mode is a
 Catalyst-analysis HANG — no artifact, no detector, no stack trace. The
 fix class is lineage severing via ``CheckpointChain``; this file is the
 regression ratchet: run >=10 rounds of each iterative site and assert
-the per-step input-plan node count (recorded by the chain) stays FLAT
-across steady-state rounds. Reverting a site's CheckpointChain wiring
+the per-step input-plan node count (recorded by the ``chain_sizes``
+fixture, which wraps ``CheckpointChain.step``) stays FLAT across
+steady-state rounds. Reverting a site's CheckpointChain wiring
 makes its steady-state sizes double per round — this fails in seconds,
 long before the round count where analysis would hang.
 """
@@ -19,12 +20,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from ubdc_airbnb_spark.operators import iterstate
-from ubdc_airbnb_spark.operators.iterstate import (
-    _CHAIN_REGISTRY,
-    plan_node_count,
-    reset_chain_registry,
-)
+from ubdc_airbnb_spark.operators.iterstate import CheckpointChain, plan_node_count
 
 #: steady-state flatness: sizes[2:] of any chain with >= MIN_STEPS steps
 #: may wobble by at most this many nodes (a doubling loop adds the
@@ -33,15 +29,34 @@ _SLACK = 2
 _ABS_BOUND = 250  # absolute sanity cap on any recorded step plan
 
 
-def _assert_flat_chains(min_steps: int, expect_chains: int = 1) -> None:
-    """Every registered chain with >= min_steps steps must be flat in
-    its steady state; at least ``expect_chains`` such chains must exist
-    (so reverting the chain wiring fails the test instead of passing it
+@pytest.fixture
+def chain_sizes(monkeypatch):
+    """Per-chain lists of the analyzed-plan node count of each
+    ``CheckpointChain.step`` input, recorded for the test's duration —
+    operators create their chains internally, so the sizes are taken at
+    the step boundary instead of from loop locals."""
+    sizes: dict[CheckpointChain, list[int]] = {}
+    step = CheckpointChain.step
+
+    def recording_step(self, df, eager=True):
+        sizes.setdefault(self, []).append(plan_node_count(df))
+        return step(self, df, eager)
+
+    monkeypatch.setattr(CheckpointChain, "step", recording_step)
+    return sizes
+
+
+def _assert_flat_chains(
+    chain_sizes: dict, min_steps: int, expect_chains: int = 1
+) -> None:
+    """Every recorded chain with >= min_steps steps must be flat in its
+    steady state; at least ``expect_chains`` such chains must exist (so
+    reverting the chain wiring fails the test instead of passing it
     vacuously)."""
-    deep = [c.step_plan_sizes for c in _CHAIN_REGISTRY if len(c.step_plan_sizes) >= min_steps]
+    deep = [s for s in chain_sizes.values() if len(s) >= min_steps]
     assert len(deep) >= expect_chains, (
         f"expected >= {expect_chains} chains with >= {min_steps} steps, "
-        f"got sizes {[c.step_plan_sizes for c in _CHAIN_REGISTRY]}"
+        f"got sizes {list(chain_sizes.values())}"
     )
     for sizes in deep:
         # interior steps only: step 0 is the seed (smaller by design)
@@ -53,7 +68,7 @@ def _assert_flat_chains(min_steps: int, expect_chains: int = 1) -> None:
         assert max(sizes) <= _ABS_BOUND, f"plan unexpectedly large: {sizes}"
 
 
-def test_connected_components_plan_flat_across_rounds(spark):
+def test_connected_components_plan_flat_across_rounds(spark, chain_sizes):
     """A 700-node path graph: pointer-jumping needs ~10 propagation
     rounds — every round's label-state plan must be the same size."""
     from ubdc_airbnb_spark.operators.graph import connected_components
@@ -63,38 +78,35 @@ def test_connected_components_plan_flat_across_rounds(spark):
         [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
     ).coalesce(4)
     nodes = spark.createDataFrame([(i,) for i in range(n)], "id long").coalesce(4)
-    reset_chain_registry()
     out = connected_components(edges, nodes, src="id_a", dst="id_b")
     assert out.filter(F.col("component") != 0).count() == 0
-    _assert_flat_chains(min_steps=5)
+    _assert_flat_chains(chain_sizes, min_steps=5)
 
 
-def test_pagerank_plan_flat_across_iterations(spark):
+def test_pagerank_plan_flat_across_iterations(spark, chain_sizes):
     from ubdc_airbnb_spark.operators.graph import pagerank
 
     edges = spark.createDataFrame(
         [(i, (i * 7 + 3) % 40) for i in range(120)], "src long, dst long"
     ).coalesce(4)
-    reset_chain_registry()
     ranks = pagerank(edges, iterations=10, checkpoint_every=1)
     assert ranks.count() > 0
-    _assert_flat_chains(min_steps=10)
+    _assert_flat_chains(chain_sizes, min_steps=10)
 
 
-def test_bpe_train_plan_flat_across_merges(spark):
+def test_bpe_train_plan_flat_across_merges(spark, chain_sizes):
     from ubdc_airbnb_spark.operators.bpe import bpe_train
 
     docs = spark.createDataFrame(
         [(i, "low lower lowest newer newest wide widen slow slower") for i in range(30)],
         "doc_id long, text string",
     ).coalesce(2)
-    reset_chain_registry()
     merges = bpe_train(docs, n_merges=12, min_count=2, checkpoint_every=1)
     assert merges.count() >= 10
-    _assert_flat_chains(min_steps=10)
+    _assert_flat_chains(chain_sizes, min_steps=10)
 
 
-def test_discover_plan_flat_across_waves(spark):
+def test_discover_plan_flat_across_waves(spark, chain_sizes):
     """A max-depth pagination chain (the real city-center shape): 12
     pages = 12 BFS waves, each wave MERGEs into the accumulated
     listings state — the exact site that hung at 52 waves pre-fix."""
@@ -114,10 +126,9 @@ def test_discover_plan_flat_across_waves(spark):
                 items_offset=10 * p,
             ),
         )
-    reset_chain_registry()
     res = discovery.discover(spark, api, [deep], max_level=22)
     assert res.waves == pages and res.fetches == pages
-    _assert_flat_chains(min_steps=10)
+    _assert_flat_chains(chain_sizes, min_steps=10)
 
 
 def test_plan_node_count_detects_doubling(spark):
@@ -136,17 +147,3 @@ def test_plan_node_count_detects_doubling(spark):
         )
         sizes.append(plan_node_count(state))
     assert sizes[-1] > sizes[0] * 4, sizes
-
-
-def test_chain_registry_bounded():
-    reset_chain_registry()
-
-    class _Fake:  # registry cares only about list length
-        pass
-
-    for _ in range(40):
-        iterstate._CHAIN_REGISTRY.append(_Fake())
-        while len(iterstate._CHAIN_REGISTRY) > iterstate._CHAIN_REGISTRY_MAX:
-            iterstate._CHAIN_REGISTRY.pop(0)
-    assert len(iterstate._CHAIN_REGISTRY) == iterstate._CHAIN_REGISTRY_MAX
-    reset_chain_registry()

@@ -364,8 +364,8 @@ def _unbounded_single_partition_subtrees(df) -> list[str]:
 
 
 def _force_twopass(monkeypatch):
-    """auto mode picks the (optimal) single-partition plan below the size
-    threshold; these tests assert the AT-SCALE plan, so drop the
+    """The size dispatch picks the (optimal) single-partition plan below
+    the threshold; these tests assert the AT-SCALE plan, so drop the
     threshold to force the two-pass path."""
     from ubdc_airbnb_spark.operators import prefixsum
 
@@ -420,18 +420,19 @@ def test_w3_rank_is_take_ordered_then_bounded_window(spark):
     assert "TakeOrderedAndProject" in plan
 
 
-def test_partitioned_cumsum_matches_global_window(spark):
+def test_partitioned_cumsum_matches_global_window(spark, monkeypatch):
     """Exactness of the two-pass prefix sum vs the naive global window,
     including duplicate bucket keys straddling boundaries."""
     from pyspark.sql import Window
 
     from ubdc_airbnb_spark.operators.prefixsum import partitioned_cumsum, partitioned_row_number
 
+    _force_twopass(monkeypatch)
     rows = [(i % 37, i, (i * 7) % 11 + 1) for i in range(1000)]
     df = spark.createDataFrame(rows, "k long, id long, v long")
     got = partitioned_cumsum(
         df, order=[F.col("k"), F.col("id")], value=F.col("v"),
-        out_col="cum", bucket_key=F.col("k"), num_buckets=8, mode="twopass",
+        out_col="cum", bucket_key=F.col("k"), num_buckets=8,
     )
     w = Window.orderBy("k", "id").rowsBetween(Window.unboundedPreceding, 0)
     want = df.withColumn("cum", F.sum("v").over(w))
@@ -439,7 +440,7 @@ def test_partitioned_cumsum_matches_global_window(spark):
 
     got_rn = partitioned_row_number(
         df, order=[F.col("k"), F.col("id")], out_col="rn",
-        bucket_key=F.col("k"), num_buckets=8, mode="twopass",
+        bucket_key=F.col("k"), num_buckets=8,
     )
     w2 = Window.orderBy("k", "id")
     want_rn = df.withColumn("rn", F.row_number().over(w2).cast("long"))

@@ -100,17 +100,20 @@ def _toy_corpus(spark, n=40, dim=16, seed=7):
     return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
 
-def test_topk_ranks_identical_across_kernels(spark, monkeypatch):
+def test_topk_ranks_identical_across_kernels(spark, monkeypatch, tmp_path):
     """The dispatch-safety invariant (VERDICT r10 item 1): for an
     ordering-only operator, both kernels must produce the same
     (query_id, neighbor_id, rank) set on the same frame."""
-    corpus = _toy_corpus(spark)
+    path = str(tmp_path / "emb_topk.parquet")
+    _toy_corpus(spark).write.parquet(path)
+    corpus = spark.read.parquet(path)  # footer-sized for the dispatch
     queries = _toy_corpus(spark, n=5, seed=11)
-    monkeypatch.setattr(sim, "VECTORIZED_COSINE", False)
-    hof = sorted(map(tuple, sim.brute_force_topk(corpus, queries, k=4).collect()))
-    monkeypatch.setattr(sim, "VECTORIZED_COSINE", True)
-    # force the Arrow kernel regardless of the tiny LocalRelation
-    # rowCount the dispatch would otherwise see
+    # force each kernel through the size dispatch: a threshold above the
+    # corpus size picks the HOF fold, a zero threshold the Arrow kernel
+    monkeypatch.setattr(sim, "VECTORIZED_MIN_ROWS", 1 << 62)
+    hof_df = sim.brute_force_topk(corpus, queries, k=4)
+    assert "ArrowEvalPython" not in _plan(hof_df)
+    hof = sorted(map(tuple, hof_df.collect()))
     monkeypatch.setattr(sim, "VECTORIZED_MIN_ROWS", 0)
     vec_df = sim.brute_force_topk(corpus, queries, k=4)
     assert "ArrowEvalPython" in _plan(vec_df)

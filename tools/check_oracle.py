@@ -63,7 +63,7 @@ def main() -> int:
             n_fail += 1
             continue
         finally:
-            release_pins()  # 173-query session: hold one query's pins max
+            release_pins()  # 221-query session: hold one query's pins max
         if name not in oracles:
             print(f"rows  {name}: {len(sdf)} rows (no oracle)")
             n_rowsonly += 1

@@ -56,25 +56,14 @@ FEATURE_SCHEMA = T.StructType(
 )
 
 
-#: session -> last Arrow batch size set; makes the per-constructor
-#: conf.set a no-op py4j-wise when the value is unchanged (hot query
-#: constructors run many times per bench/gate session). WEAK keys on the
-#: live session object — an id()-keyed dict would survive the session
-#: and can collide with a NEW session allocated at the same CPython
-#: address, silently skipping a conf.set the new session needs (the
-#: executor-OOM guard for binary payload batches). Known residual risk:
-#: external code writing the conf key directly between calls still
-#: staleness this memo; in-repo all writers go through here.
-import weakref
-
-_ARROW_BATCH_LAST: "weakref.WeakKeyDictionary[object, str]" = weakref.WeakKeyDictionary()
+#: rows per Arrow batch for every binary-payload stage: bounds the bytes
+#: a Python worker holds at once (the executor-OOM guard for payload
+#: batches). Set on the session by every stage constructor.
+ARROW_BATCH_ROWS = 256
 
 
-def _set_arrow_batch(spark, batch_size: int) -> None:
-    val = str(batch_size)
-    if _ARROW_BATCH_LAST.get(spark) != val:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", val)
-        _ARROW_BATCH_LAST[spark] = val
+def _set_arrow_batch(spark) -> None:
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_ROWS))
 
 
 def attach_binary(df: DataFrame, id_col: str, payload_col: str, media_type: str = "application/octet-stream") -> DataFrame:
@@ -130,7 +119,7 @@ def _png_stats_append(out: dict, mid, content: bytes) -> None:
     out["px_max"].append(int(arr.max()))
 
 
-def decode_png_stats(media: DataFrame, batch_size: int = 256) -> DataFrame:
+def decode_png_stats(media: DataFrame) -> DataFrame:
     """REAL image decode stage — pure-stdlib PNG (zlib inflate, chunk CRC
     verification, all five scanline unfilters; see ``png.decode_png``) in
     the same Arrow-batched ``mapInPandas`` plumbing as the other kernels.
@@ -149,8 +138,7 @@ def decode_png_stats(media: DataFrame, batch_size: int = 256) -> DataFrame:
                 _png_stats_append(out, mid, content)
             yield pd.DataFrame({k: pd.array(v, dtype="int64") for k, v in out.items()})
 
-    spark = media.sparkSession
-    _set_arrow_batch(spark, batch_size)
+    _set_arrow_batch(media.sparkSession)
     return _spread(media).mapInPandas(_decode, PNG_STATS_SCHEMA)
 
 
@@ -169,7 +157,7 @@ WAV_STATS_SCHEMA = T.StructType(
 )
 
 
-def decode_wav_stats(media: DataFrame, batch_size: int = 256) -> DataFrame:
+def decode_wav_stats(media: DataFrame) -> DataFrame:
     """REAL audio decode stage — pure-stdlib PCM WAV (RIFF chunk parsing,
     8/16-bit samples; see ``wav.decode_wav``) in the same Arrow-batched
     ``mapInPandas`` plumbing as the PNG kernel. Emits per-clip format
@@ -197,8 +185,7 @@ def decode_wav_stats(media: DataFrame, batch_size: int = 256) -> DataFrame:
                 out["s_max"].append(int(arr.max()))
             yield pd.DataFrame({k: pd.array(v, dtype="int64") for k, v in out.items()})
 
-    spark = media.sparkSession
-    _set_arrow_batch(spark, batch_size)
+    _set_arrow_batch(media.sparkSession)
     return _spread(media).mapInPandas(_decode, WAV_STATS_SCHEMA)
 
 
@@ -321,7 +308,7 @@ def _ids_spread(ids: DataFrame) -> DataFrame:
     return ids.repartition(cores)
 
 
-def synthetic_png_stats(ids: DataFrame, id_col: str = "doc_id", batch_size: int = 256) -> DataFrame:
+def synthetic_png_stats(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """FUSED fixture+decode (r11 optimization): bit-identical output to
     ``decode_png_stats(synthetic_png_media(ids))`` — both compositions
     call the same ``_png_fixture_blob`` / ``_png_stats_append`` row
@@ -345,14 +332,13 @@ def synthetic_png_stats(ids: DataFrame, id_col: str = "doc_id", batch_size: int 
                 _png_stats_append(out, did, _png_fixture_blob(did))
             yield pd.DataFrame({k: pd.array(v, dtype="int64") for k, v in out.items()})
 
-    spark = ids.sparkSession
-    _set_arrow_batch(spark, batch_size)
+    _set_arrow_batch(ids.sparkSession)
     return _ids_spread(ids.select(F.col(id_col))).mapInPandas(
         _make_and_decode, PNG_STATS_SCHEMA
     )
 
 
-def synthetic_png_dhash(ids: DataFrame, id_col: str = "doc_id", batch_size: int = 256) -> DataFrame:
+def synthetic_png_dhash(ids: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """FUSED fixture+dHash (r11 optimization): bit-identical output to
     ``image_dhash(synthetic_png_media(ids))`` via the shared
     ``_png_fixture_blob`` / ``_dhash_append`` row kernels; same
@@ -367,8 +353,7 @@ def synthetic_png_dhash(ids: DataFrame, id_col: str = "doc_id", batch_size: int 
                 _dhash_append(out, did, _png_fixture_blob(did))
             yield pd.DataFrame({k: pd.array(v, dtype="int64") for k, v in out.items()})
 
-    spark = ids.sparkSession
-    _set_arrow_batch(spark, batch_size)
+    _set_arrow_batch(ids.sparkSession)
     return _ids_spread(ids.select(F.col(id_col))).mapInPandas(
         _make_and_hash, DHASH_SCHEMA
     )
@@ -413,7 +398,7 @@ def _spread(media: DataFrame) -> DataFrame:
 
 
 def frame_sample(
-    media: DataFrame, frame_bytes: int = 64, every: int = 2, batch_size: int = 256
+    media: DataFrame, frame_bytes: int = 64, every: int = 2
 ) -> DataFrame:
     """Video-style frame sampling over an opaque binary payload: treat the
     content as fixed-size frames, keep every ``every``-th, emit one row per
@@ -444,12 +429,11 @@ def frame_sample(
                 }
             )
 
-    spark = media.sparkSession
-    _set_arrow_batch(spark, batch_size)
+    _set_arrow_batch(media.sparkSession)
     return _spread(media).mapInPandas(_frames, FRAME_SCHEMA)
 
 
-def decode_fake(media: DataFrame, batch_size: int = 256) -> DataFrame:
+def decode_fake(media: DataFrame) -> DataFrame:
     """mapInPandas decode stage with production batch plumbing: Arrow
     batches in, feature rows out; binary column dropped on output so
     downstream stages shuffle features, not payloads."""
@@ -471,8 +455,7 @@ def decode_fake(media: DataFrame, batch_size: int = 256) -> DataFrame:
                 }
             )
 
-    spark = media.sparkSession
-    _set_arrow_batch(spark, batch_size)
+    _set_arrow_batch(media.sparkSession)
     return _spread(media).mapInPandas(_decode, FEATURE_SCHEMA)
 
 
@@ -486,7 +469,7 @@ POOL_SCHEMA = T.StructType(
 )
 
 
-def resize_pool(media: DataFrame, k: int = 4, batch_size: int = 256) -> DataFrame:
+def resize_pool(media: DataFrame, k: int = 4) -> DataFrame:
     """Image RESIZE stage (average-pool to a k×k grid) with the decode
     step replaced by the disclosed deterministic byte interpretation:
     content bytes laid out row-major as a w×h "image" with
@@ -541,8 +524,7 @@ def resize_pool(media: DataFrame, k: int = 4, batch_size: int = 256) -> DataFram
                 }
             )
 
-    spark = media.sparkSession
-    _set_arrow_batch(spark, batch_size)
+    _set_arrow_batch(media.sparkSession)
     return _spread(media).mapInPandas(_pool, POOL_SCHEMA)
 
 
@@ -557,7 +539,7 @@ AUDIO_FEATURES_SCHEMA = T.StructType(
 )
 
 
-def audio_features(media: DataFrame, batch_size: int = 256) -> DataFrame:
+def audio_features(media: DataFrame) -> DataFrame:
     """Audio feature extraction over the REAL WAV decode path: per clip,
     total energy Σs², peak |s|, and strict zero-crossing count
     (s[i-1]·s[i] < 0) — the cheap speech/music/silence discriminators a
@@ -585,8 +567,7 @@ def audio_features(media: DataFrame, batch_size: int = 256) -> DataFrame:
                 )
             yield pd.DataFrame({k: pd.array(v, dtype="int64") for k, v in out.items()})
 
-    spark = media.sparkSession
-    _set_arrow_batch(spark, batch_size)
+    _set_arrow_batch(media.sparkSession)
     return _spread(media).mapInPandas(_feat, AUDIO_FEATURES_SCHEMA)
 
 
@@ -600,7 +581,7 @@ IMAGE_FEATURES_SCHEMA = T.StructType(
 )
 
 
-def image_features(media: DataFrame, threshold: int = 32, batch_size: int = 256) -> DataFrame:
+def image_features(media: DataFrame, threshold: int = 32) -> DataFrame:
     """Image feature extraction over the REAL PNG decode path: horizontal
     edge density — adjacent same-row byte pairs whose absolute
     difference exceeds ``threshold`` — the cheap blur/blank/noise
@@ -629,8 +610,7 @@ def image_features(media: DataFrame, threshold: int = 32, batch_size: int = 256)
                 out["edge_count"].append(int(((diffs > threshold) & same_row).sum()))
             yield pd.DataFrame({k: pd.array(v, dtype="int64") for k, v in out.items()})
 
-    spark = media.sparkSession
-    _set_arrow_batch(spark, batch_size)
+    _set_arrow_batch(media.sparkSession)
     return _spread(media).mapInPandas(_feat, IMAGE_FEATURES_SCHEMA)
 
 
@@ -676,7 +656,7 @@ def _dhash_append(out: dict, mid, content: bytes) -> None:
     out["dhash_lo"].append(lo)
 
 
-def image_dhash(media: DataFrame, batch_size: int = 256) -> DataFrame:
+def image_dhash(media: DataFrame) -> DataFrame:
     """Perceptual difference-hash (dHash) over the REAL PNG decode path —
     the image analog of MinHash for near-duplicate detection: channel-0
     gray pixels are block-pooled onto a fixed 9x8 grid (cell = floor
@@ -704,8 +684,7 @@ def image_dhash(media: DataFrame, batch_size: int = 256) -> DataFrame:
                 _dhash_append(out, mid, content)
             yield pd.DataFrame({k: pd.array(v, dtype="int64") for k, v in out.items()})
 
-    spark = media.sparkSession
-    _set_arrow_batch(spark, batch_size)
+    _set_arrow_batch(media.sparkSession)
     return _spread(media).mapInPandas(_hash, DHASH_SCHEMA)
 
 
@@ -718,7 +697,7 @@ AUDIO_FP_SCHEMA = T.StructType(
 )
 
 
-def audio_fingerprint(media: DataFrame, frame: int = 8, batch_size: int = 256) -> DataFrame:
+def audio_fingerprint(media: DataFrame, frame: int = 8) -> DataFrame:
     """Energy-contour audio fingerprint over the REAL WAV decode — the
     audio analog of the image dHash: PCM samples are grouped into
     ``frame``-sample frames, each frame's exact integer energy Σs² is
@@ -753,6 +732,5 @@ def audio_fingerprint(media: DataFrame, frame: int = 8, batch_size: int = 256) -
                 out["fingerprint"].append(fp)
             yield pd.DataFrame({k: pd.array(v, dtype="int64") for k, v in out.items()})
 
-    spark = media.sparkSession
-    _set_arrow_batch(spark, batch_size)
+    _set_arrow_batch(media.sparkSession)
     return _spread(media).mapInPandas(_fp, AUDIO_FP_SCHEMA)

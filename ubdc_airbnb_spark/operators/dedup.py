@@ -40,24 +40,12 @@ def _corpus_rows(df: DataFrame) -> int:
     stats rowCount. Any other shape (Filter, Join, ...) — where footer
     totals would be WRONG, not just approximate — falls back to an
     honest per-build count job."""
-    from .similarity import _footer_rows
+    from .similarity import _footer_rows, _plan_stats_rows
 
-    try:
-        plan = df._jdf.queryExecution().optimizedPlan()
-        for _ in range(32):
-            if plan.getClass().getSimpleName() != "Project":
-                break
-            plan = plan.children().apply(0)
-        rc = plan.stats().rowCount()
-        if rc.isDefined():
-            return int(str(rc.get()))
-        if plan.getClass().getSimpleName() == "LogicalRelation":
-            rows = _footer_rows(df)
-            if rows is not None:
-                return rows
-    except Exception:
-        pass
-    return df.count()
+    rows, stop = _plan_stats_rows(df)
+    if rows is None and stop == "LogicalRelation":
+        rows = _footer_rows(df)
+    return df.count() if rows is None else rows
 
 
 def _threshold_ratio(threshold: float) -> tuple[int, int]:

@@ -39,22 +39,11 @@ def plan_node_count(df: DataFrame) -> int:
     its previous generation twice DOUBLES this per round unless the
     lineage is severed, and the failure mode is a Catalyst-analysis
     HANG (the r10 discovery MERGE at 52 waves), which no artifact or
-    detector sees. tests/test_plan_ratchet.py asserts per-step flatness
-    for every iterative site via the chain's ``step_plan_sizes``."""
+    detector sees. tests/test_plan_ratchet.py records it for each
+    ``CheckpointChain.step`` input and asserts per-step flatness for
+    every iterative site."""
     lp = df._jdf.queryExecution().analyzed()
     return lp.treeString().count("\n") + 1
-
-
-#: the most recent CheckpointChain instances (test hook for the plan
-#: ratchet — operators create chains internally, so the test reads the
-#: per-step plan sizes from here instead of reaching into loop locals).
-#: Bounded to the last 16 chains; reset with :func:`reset_chain_registry`.
-_CHAIN_REGISTRY: list["CheckpointChain"] = []
-_CHAIN_REGISTRY_MAX = 16
-
-
-def reset_chain_registry() -> None:
-    _CHAIN_REGISTRY.clear()
 
 
 def _persistent_ids(scala_sc) -> set[int]:
@@ -83,13 +72,6 @@ class CheckpointChain:
     def __init__(self, spark: SparkSession):
         self._scala_sc = spark.sparkContext._jsc.sc()
         self._gens: list[set[int]] = []
-        #: analyzed-plan node count of each step's INPUT frame — flat
-        #: across steady-state rounds when lineage severing works,
-        #: doubling per round when it does not (see plan_node_count)
-        self.step_plan_sizes: list[int] = []
-        _CHAIN_REGISTRY.append(self)
-        while len(_CHAIN_REGISTRY) > _CHAIN_REGISTRY_MAX:
-            _CHAIN_REGISTRY.pop(0)
 
     def step(self, df: DataFrame, eager: bool = True) -> DataFrame:
         before = _persistent_ids(self._scala_sc)
@@ -106,7 +88,6 @@ class CheckpointChain:
         # default localCheckpoint uses is MEMORY_AND_DISK_DESER.
         from pyspark.storagelevel import StorageLevel
 
-        self.step_plan_sizes.append(plan_node_count(df))
         out = df.localCheckpoint(eager=eager, storageLevel=StorageLevel.MEMORY_AND_DISK)
         ids: set[int] | None = None
         try:

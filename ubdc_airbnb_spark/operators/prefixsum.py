@@ -29,15 +29,13 @@ Degenerate inputs (all keys equal, or fewer distinct keys than buckets)
 collapse into fewer buckets and in the worst case one partition — i.e.
 never worse than the plan this module replaces.
 
-**Adaptive plan choice** (``mode="auto"``, the default): below
-``SINGLE_PARTITION_MAX_BYTES`` of estimated input the plain
-single-partition window IS the optimal physical plan — one task, zero
-extra jobs — so auto picks it from Catalyst's size estimate, exactly as
-Spark picks broadcast over shuffle joins by stats. Above the threshold
-(always, at cluster scale) auto runs the two-pass plan. Results are
-bit-identical either way; only the physical strategy changes. Force with
-``mode="twopass"``/``mode="single"``; plan tests force two-pass via a
-monkeypatched threshold.
+**Adaptive plan choice**: below ``SINGLE_PARTITION_MAX_BYTES`` of
+estimated input the plain single-partition window IS the optimal
+physical plan — one task, zero extra jobs — so it is picked from
+Catalyst's size estimate, exactly as Spark picks broadcast over shuffle
+joins by stats. Above the threshold (always, at cluster scale) the
+two-pass plan runs. Results are bit-identical either way; only the
+physical strategy changes.
 
 Reference analog: the reference serializes this work through Postgres
 sequences / Python loops (single-node by construction); these operators
@@ -54,7 +52,7 @@ from pyspark.sql import functions as F
 
 DEFAULT_BUCKETS = 64
 
-#: auto-mode cutover: inputs whose Catalyst size estimate is below this
+#: plan cutover: inputs whose Catalyst size estimate is below this
 #: run the plain global window (optimal for one task's worth of data)
 SINGLE_PARTITION_MAX_BYTES = 64 << 20
 
@@ -66,13 +64,9 @@ def _estimated_bytes(df: DataFrame) -> int | None:
         return None
 
 
-def _go_single(df: DataFrame, mode: str, size_of: DataFrame | None = None) -> bool:
+def _go_single(df: DataFrame, size_of: DataFrame | None = None) -> bool:
     """True → emit the single-partition window. Unknown size falls back
     to the two-pass plan (the scale-safe default)."""
-    if mode == "single":
-        return True
-    if mode == "twopass":
-        return False
     est = _estimated_bytes(size_of if size_of is not None else df)
     return est is not None and est <= SINGLE_PARTITION_MAX_BYTES
 
@@ -96,7 +90,7 @@ def _pin(df: DataFrame) -> DataFrame:
     standard shape for multi-pass jobs.
 
     Pins are registered (deduped by semantic plan hash) and live until
-    ``release_pins()`` — long sessions (the 173-query gate, cmd_report)
+    ``release_pins()`` — long sessions (the 221-query gate, cmd_report)
     MUST call it after each query's terminal action or dead cache
     entries accumulate and compete with live pins for storage memory."""
     from pyspark.storagelevel import StorageLevel
@@ -217,20 +211,19 @@ def partitioned_cumsum(
     out_col: str,
     bucket_key: Column,
     num_buckets: int = DEFAULT_BUCKETS,
-    mode: str = "auto",
     size_of: DataFrame | None = None,
 ) -> DataFrame:
     """Exact running sum of ``value`` over the global sort ``order``,
-    without a single-partition window (above the auto threshold).
+    without a single-partition window (above the size threshold).
 
     ``bucket_key`` must be numeric and monotone NON-DECREASING along
     ``order`` (negate it for a descending leading sort key). Ties in
     ``bucket_key`` are safe — they land in one bucket and the
     within-bucket window resolves them with the full ``order``.
-    ``size_of`` overrides the frame whose Catalyst estimate drives auto
-    mode (useful when ``df`` carries a join that inflates the estimate).
+    ``size_of`` overrides the frame whose Catalyst estimate drives the
+    plan choice (useful when ``df`` carries a join that inflates the estimate).
     """
-    if _go_single(df, mode, size_of):
+    if _go_single(df, size_of):
         w = Window.orderBy(*order).rowsBetween(Window.unboundedPreceding, Window.currentRow)
         return df.withColumn(out_col, F.sum(value).over(w))
     d = _with_buckets(_pin(df), bucket_key, num_buckets)
@@ -256,12 +249,11 @@ def partitioned_row_number(
     out_col: str,
     bucket_key: Column,
     num_buckets: int = DEFAULT_BUCKETS,
-    mode: str = "auto",
     size_of: DataFrame | None = None,
 ) -> DataFrame:
     """Exact global ``row_number()`` over ``order`` as a two-pass rank:
     per-bucket ``row_number`` + broadcast bucket row-count offsets."""
-    if _go_single(df, mode, size_of):
+    if _go_single(df, size_of):
         w = Window.orderBy(*order)
         return df.withColumn(out_col, F.row_number().over(w).cast("long"))
     d = _with_buckets(_pin(df), bucket_key, num_buckets)
@@ -284,7 +276,6 @@ def neighborhood_with_carry(
     bucket_key: Column,
     window: int,
     num_buckets: int = DEFAULT_BUCKETS,
-    mode: str = "auto",
     size_of: DataFrame | None = None,
 ) -> tuple[DataFrame, str, str]:
     """Prepare a sorted-neighborhood sweep without a global window: rows
@@ -304,7 +295,7 @@ def neighborhood_with_carry(
     its lag sweep partitioned by ``bucket_col`` ordered by ``order`` and
     filters output rows to ``carry_col == false``.
     """
-    if _go_single(df, mode, size_of):
+    if _go_single(df, size_of):
         # single-partition plan: one constant bucket, no carries needed
         return (
             df.withColumn("__rb", F.lit(0)).withColumn("__carry", F.lit(False)),

@@ -8,8 +8,7 @@ ops, r10): the previous higher-order-function form (``zip_with`` +
 interprets rather than codegens — measured 2.7x slower on the
 200k-score brute-force shape at sf1 (BENCH_NOTES r10). The HOF form
 survives as ``dot``/``norm``/``cosine_expr`` (the text twins the
-SQL-string call sites and the oracle replays use) and behind
-``VECTORIZED_COSINE = False`` for bit-exact fold-order reproduction.
+SQL-string call sites and the oracle replays use).
 Ranks/ids that gates output are invariant to the kernel's summation
 order (verified by the full 221-gate oracle run at the swap).
 
@@ -27,10 +26,6 @@ from pyspark.sql.functions import broadcast, pandas_udf
 from pyspark.sql.types import DoubleType
 
 from .windows import first_row_per_key
-
-#: route the shared cosine kernel through the Arrow-vectorized path.
-#: False restores the sequential-fold HOF (bit-exact with cosine_expr).
-VECTORIZED_COSINE = True
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -139,10 +134,8 @@ def cosine(a: Column, b: Column) -> Column:
     rows (0/0); the ``nanvl``+``nullif`` wrapper maps NaN to NULL.
     Spark's ExtractPythonUDFs rule dedupes the two identical UDF
     references into ONE Arrow evaluation."""
-    if VECTORIZED_COSINE:
-        raw = _cosine_udf(a, b)
-        return F.when(F.isnan(raw), F.lit(None).cast("double")).otherwise(raw)
-    return dot(a, b) / F.nullif(norm(a) * norm(b), F.lit(0.0))
+    raw = _cosine_udf(a, b)
+    return F.when(F.isnan(raw), F.lit(None).cast("double")).otherwise(raw)
 
 
 def dot_expr(a_sql: str, b_sql: str) -> str:
@@ -186,10 +179,6 @@ def cosine_expr(a_sql: str, b_sql: str) -> str:
 #: sensitivity at gate scale as a side effect.
 VECTORIZED_MIN_ROWS = 10_000
 
-#: parquet path -> footer num_rows (footers are immutable per path;
-#: index compaction writes NEW generation paths, never rewrites)
-_FOOTER_ROWS_CACHE: dict = {}
-
 
 def _footer_rows(df: DataFrame):
     """Source-cardinality estimate from parquet footers — metadata only,
@@ -210,19 +199,14 @@ def _footer_rows(df: DataFrame):
 
     total = 0
     for uri in files:
-        if uri in _FOOTER_ROWS_CACHE:
-            total += _FOOTER_ROWS_CACHE[uri]
-            continue
         parsed = urlparse(uri)
         if parsed.scheme not in ("file", ""):
             return None
         path = unquote(parsed.path)
         try:
-            rows = pq.ParquetFile(path).metadata.num_rows
+            total += pq.ParquetFile(path).metadata.num_rows
         except Exception:
             return None
-        _FOOTER_ROWS_CACHE[uri] = rows
-        total += rows
     return total
 
 
@@ -237,20 +221,26 @@ def _plan_stats_rows(df: DataFrame):
     None and mis-classified a 5k-row input as BIG), so walk down
     through row-preserving Project nodes until a rowCount appears.
     Anything else (Filter, Join, Aggregate — genuinely cardinality-
-    changing) stops the walk: then None, and the caller assumes BIG.
-    No job is run: this reads driver-side plan statistics only."""
+    changing) stops the walk.
+    No job is run: this reads driver-side plan statistics only.
+
+    Returns ``(rows, stop)``. ``rows`` is the stats row count or None.
+    When it is None, ``stop`` is the simple class name of the node the
+    walk ended at (None if the plan could not be read), so a caller can
+    tell a bare file relation from a cardinality-changing node."""
     try:
         plan = df._jdf.queryExecution().optimizedPlan()
         for _ in range(32):
             rc = plan.stats().rowCount()
             if rc.isDefined():
-                return int(str(rc.get()))
-            if plan.getClass().getSimpleName() != "Project":
-                return None
+                return int(str(rc.get())), None
+            name = plan.getClass().getSimpleName()
+            if name != "Project":
+                return None, name
             plan = plan.children().apply(0)
     except Exception:
-        return None
-    return None
+        pass
+    return None, None
 
 
 def _approx_rows(df: DataFrame):
@@ -260,13 +250,12 @@ def _approx_rows(df: DataFrame):
     rows = _footer_rows(df)
     if rows is not None:
         return rows
-    return _plan_stats_rows(df)
+    return _plan_stats_rows(df)[0]
 
 
 def cosine_cols(a_name: str, b_name: str, sized_by: DataFrame | None = None) -> Column:
     """:func:`cosine` over two NAMED columns. Routes through the shared
-    kernel (vectorized by default, r10); with ``VECTORIZED_COSINE``
-    off it falls back to the single-parse HOF text form.
+    kernel (vectorized, r10).
 
     ``sized_by`` (r11): ORDERING/THRESHOLD-only call sites pass the
     frame whose source cardinality should pick the kernel — the HOF
@@ -277,8 +266,6 @@ def cosine_cols(a_name: str, b_name: str, sized_by: DataFrame | None = None) -> 
     (test_similarity_kernels.py pins rank equality and the near-
     threshold caveat); sites whose OUTPUT is the float itself must
     call :func:`cosine_cols_exact` directly and never dispatch."""
-    if not VECTORIZED_COSINE:
-        return cosine_cols_exact(a_name, b_name)
     if sized_by is not None:
         rows = _approx_rows(sized_by)
         if rows is not None and rows < VECTORIZED_MIN_ROWS:

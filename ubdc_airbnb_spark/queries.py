@@ -3267,7 +3267,7 @@ def ns_token_budget(spark: SparkSession, sf: str) -> DataFrame:
         value=F.col("n_tokens"),
         out_col="cum_tokens",
         bucket_key=-F.col("quality"),
-        size_of=s,  # the broadcast cut join would inflate the auto estimate
+        size_of=s,  # the broadcast cut join would inflate the size estimate
     )
     return out.select(
         "doc_id", "n_tokens", "quality", F.col("cum_tokens").cast("long")
