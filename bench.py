@@ -186,11 +186,6 @@ def main() -> None:
         extra_conf={
             "spark.sql.adaptive.enabled": os.environ.get("SPARK_GRAFT_AQE", "false"),
             "spark.sql.adaptive.coalescePartitions.enabled": os.environ.get("SPARK_GRAFT_COALESCE", "false"),
-            # cache knobs exposed for sweeps; larger uncompressed batches
-            # won an isolated subset A/B (~18%) but not a full-set A/B on
-            # this noisy host, so the Spark defaults stay
-            "spark.sql.inMemoryColumnarStorage.batchSize": os.environ.get("SPARK_GRAFT_CACHE_BATCH", "10000"),
-            "spark.sql.inMemoryColumnarStorage.compressed": os.environ.get("SPARK_GRAFT_CACHE_COMPRESS", "true"),
         },
     )
 

@@ -10,6 +10,8 @@ from __future__ import annotations
 import ast
 from pathlib import Path
 
+import pytest
+
 import ubdc_airbnb_spark
 from ubdc_airbnb_spark import queries as q_mod
 from ubdc_airbnb_spark.operators.prefixsum import _PINNED, _pin, release_pins
@@ -51,6 +53,24 @@ def test_unpin_removes_registry_entry(spark):
     again = _pin(spark.range(50).selectExpr("id", "id * 3 as v"))
     assert again is not df and len(_PINNED) == 1
     release_pins()
+
+
+def test_release_pins_failure_is_loud_and_keeps_entry(spark, monkeypatch):
+    """A failed unpersist must propagate out of release_pins() and leave
+    the entry registered, so a leaked cache entry is never hidden."""
+    release_pins()
+    df = _pin(spark.range(30).selectExpr("id", "id * 5 as v"))
+
+    def _fail(*args, **kwargs):
+        raise RuntimeError("unpersist failed")
+
+    monkeypatch.setattr(df, "unpersist", _fail)
+    with pytest.raises(RuntimeError, match="unpersist failed"):
+        release_pins()
+    assert len(_PINNED) == 1 and next(iter(_PINNED.values())) is df
+    monkeypatch.undo()
+    assert release_pins() == 1
+    assert len(_PINNED) == 0
 
 
 def test_curation_rerun_gets_live_pins(spark):

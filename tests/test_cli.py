@@ -1,4 +1,5 @@
-"""Round-4 CLI commands: train-bpe, screen-drop, dsir-score."""
+"""Corpus CLI commands: train-bpe, screen-drop, dsir-score,
+write-shards and compact-index."""
 
 from __future__ import annotations
 
@@ -7,12 +8,12 @@ from pyspark.sql import functions as F
 from ubdc_airbnb_spark import cli
 from ubdc_airbnb_spark.sources.tables import load_table
 
-SF = "/root/testdata/sf0.001"
+from conftest import SF_DIR
 
 
 def test_cli_train_bpe(spark, tmp_path, capsys):
     out = str(tmp_path / "merges")
-    rc = cli.main(["train-bpe", "--sf-dir", SF, "--merges", "6", "--output", out])
+    rc = cli.main(["train-bpe", "--sf-dir", SF_DIR, "--merges", "6", "--output", out])
     assert rc == 0
     merges = spark.read.parquet(out)
     assert merges.count() == 6
@@ -20,7 +21,7 @@ def test_cli_train_bpe(spark, tmp_path, capsys):
 
 
 def test_cli_screen_drop_build_probe_add(spark, tmp_path, capsys):
-    docs = load_table(spark, SF, "documents")
+    docs = load_table(spark, SF_DIR, "documents")
     corpus_p = str(tmp_path / "corpus")
     drop_p = str(tmp_path / "drop")
     docs.filter(F.col("doc_id") < 40).write.parquet(corpus_p)
@@ -47,7 +48,7 @@ def test_cli_screen_drop_build_probe_add(spark, tmp_path, capsys):
 def test_cli_dsir_score(spark, tmp_path, capsys):
     out = str(tmp_path / "weights")
     rc = cli.main(
-        ["dsir-score", "--sf-dir", SF, "--target-sql", "lang = 'en'", "--output", out]
+        ["dsir-score", "--sf-dir", SF_DIR, "--target-sql", "lang = 'en'", "--output", out]
     )
     assert rc == 0
     w = spark.read.parquet(out)
@@ -63,7 +64,7 @@ def test_write_shards_cli(tmp_path, capsys):
         [
             "write-shards",
             "--sf-dir",
-            "/root/testdata/sf0.001",
+            SF_DIR,
             "--n-shards",
             "2",
             "--output",
@@ -83,7 +84,7 @@ def test_cli_compact_index_bm25_streaming(spark, tmp_path, capsys):
     from ubdc_airbnb_spark.operators.tfidf import query_bm25_index
     from ubdc_airbnb_spark.streaming import jobs
 
-    docs = load_table(spark, SF, "documents").limit(120)
+    docs = load_table(spark, SF_DIR, "documents").limit(120)
     src = str(tmp_path / "src")
     docs.repartition(3).write.parquet(src)
     idx = str(tmp_path / "bm25")
@@ -121,7 +122,7 @@ def test_cli_compact_index_ivf_and_lsh(spark, tmp_path, capsys):
     )
     from ubdc_airbnb_spark.operators.dedup_index import add_to_lsh_index, build_lsh_index
 
-    emb = load_table(spark, SF, "embeddings")
+    emb = load_table(spark, SF_DIR, "embeddings")
     ivf = str(tmp_path / "ivf")
     build_ivf_index(emb.filter(F.col("vec_id") % 2 == 0), ivf, k=4, iters=1)
     add_to_ivf_index(emb.filter(F.col("vec_id") % 2 == 1), ivf)
@@ -132,7 +133,7 @@ def test_cli_compact_index_ivf_and_lsh(spark, tmp_path, capsys):
     got = sorted(tuple(r) for r in query_ivf_index(spark, ivf, qs, k=5).collect())
     assert got == want and len(got) > 0
 
-    docs = load_table(spark, SF, "documents")
+    docs = load_table(spark, SF_DIR, "documents")
     lsh = str(tmp_path / "lsh")
     build_lsh_index(docs.filter(F.col("doc_id") % 2 == 0), lsh, n_buckets=8)
     add_to_lsh_index(docs.filter(F.col("doc_id") % 2 == 1).limit(50), lsh)

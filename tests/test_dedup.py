@@ -1,68 +1,133 @@
-"""Round-3 operator tests: prefix-sum family auto mode, stratified
-sampling, deterministic shuffle, canonical cluster resolution."""
+"""Near-duplicate detection operators: sorted-neighborhood and SimHash
+pairs, cluster resolution, LSH bucket caps and the digest-contracted
+candidate generators against the naive compositions."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-SF = "/root/testdata/sf0.001"
+from conftest import SF_DIR
 
 
-def test_prefixsum_auto_picks_single_below_threshold(spark, monkeypatch):
-    """auto = stats-driven physical choice: tiny input -> plain global
-    window (no percentile job, no bucket column); forced/large ->
-    two-pass. Results identical."""
-    from ubdc_airbnb_spark.operators import prefixsum
+# ----------------------------------- sorted-neighborhood and SimHash pairs
 
-    df = spark.createDataFrame([(i, i % 7 + 1) for i in range(100)], "id long, v long")
-    single = prefixsum.partitioned_cumsum(
-        df, order=[F.col("id")], value=F.col("v"), out_col="c", bucket_key=F.col("id")
+
+def test_sorted_neighborhood_finds_adjacent_twins(spark):
+    from ubdc_airbnb_spark.operators import dedup
+
+    sk = spark.createDataFrame(
+        [(1, 0b1010), (2, 0b1011), (3, 0b1111_0000_1010_0101), (4, 0b1010)],
+        "doc_id long, simhash long",
     )
-    # tiny input: the plan must NOT contain the bucket machinery
-    assert "__rb" not in single.columns
-    plan = single._jdf.queryExecution().executedPlan().toString()
-    assert "percentile" not in plan.lower()
-
-    monkeypatch.setattr(prefixsum, "SINGLE_PARTITION_MAX_BYTES", -1)
-    two = prefixsum.partitioned_cumsum(
-        df, order=[F.col("id")], value=F.col("v"), out_col="c", bucket_key=F.col("id")
-    )
-    assert sorted(single.collect()) == sorted(two.collect())
+    got = {
+        (r.id_a, r.id_b)
+        for r in dedup.sorted_neighborhood_pairs(sk, window=3, max_hamming=1).collect()
+    }
+    # 1,2,4 sort adjacently (values 10,11,10); 3 is far in hamming space
+    assert (1, 4) in got and (1, 2) in got and (2, 4) in got
+    assert not any(3 in p for p in got)
 
 
-def test_stratified_sample_exact_counts_and_determinism(spark):
-    from ubdc_airbnb_spark.operators.sampling import stratified_sample_exact
+def test_sorted_neighborhood_pairs_all_within_radius(spark):
+    from ubdc_airbnb_spark.operators import dedup
     from ubdc_airbnb_spark.sources.tables import load_table
 
-    docs = load_table(spark, SF, "documents")
-    sizes = {r["source"]: r["n"] for r in docs.groupBy("source").agg(F.count(F.lit(1)).alias("n")).collect()}
-    out = stratified_sample_exact(docs, ["source"], "doc_id", 3)
-    got = {r["source"]: r["n"] for r in out.groupBy("source").agg(F.count(F.lit(1)).alias("n")).collect()}
-    assert got == {s: min(3, n) for s, n in sizes.items()}
-    # deterministic: identical keys win on a second run and after repartition
-    again = stratified_sample_exact(docs.repartition(7), ["source"], "doc_id", 3)
-    assert sorted(r["doc_id"] for r in out.collect()) == sorted(r["doc_id"] for r in again.collect())
+    docs = load_table(spark, SF_DIR, "documents")
+    sk = dedup.simhash(docs, "doc_id", "text", bits=32)
+    pairs = dedup.sorted_neighborhood_pairs(sk, window=3, max_hamming=3)
+    joined = (
+        pairs.join(sk.select(F.col("doc_id").alias("id_a"), F.col("simhash").alias("ha")), "id_a")
+        .join(sk.select(F.col("doc_id").alias("id_b"), F.col("simhash").alias("hb")), "id_b")
+    )
+    bad = joined.filter(F.bit_count(F.col("ha").bitwiseXOR(F.col("hb"))) > 3).count()
+    assert bad == 0 and pairs.count() > 0
 
 
-def test_deterministic_shuffle_contract(spark):
-    from ubdc_airbnb_spark.operators.sampling import deterministic_shuffle
+def test_simhash_hamming_pairs_matches_bruteforce(spark):
+    """The scale-shaped decomposition (hamming-0 via sketch-value groups
+    + banded pigeonhole over DISTINCT sketches, verify inside the join)
+    must emit byte-identical pairs to the brute-force all-pairs scan —
+    including exact-dup multiplicity (groups of identical sketches)."""
+    from ubdc_airbnb_spark.operators import dedup
+
+    # crafted sketches: an identical triple, a hamming-1/2/3 chain off
+    # it, a hamming-4 outsider (excluded), and a far singleton
+    base = 0b1011_0110_1100_0011_0101_1010_0110_1001
+    rows = [
+        (1, base), (2, base), (3, base),
+        (4, base ^ 0b1),                 # hamming 1
+        (5, base ^ 0b110),               # hamming 2
+        (6, base ^ (1 << 31) ^ (1 << 15) ^ 1),  # hamming 3
+        (7, base ^ 0b1111),              # hamming 4 from base
+        (8, 0x0F0F0F0F),
+    ]
+    sk = spark.createDataFrame(rows, "doc_id long, simhash long")
+    got = {
+        (r.id_a, r.id_b, r.hamming)
+        for r in dedup.simhash_hamming_pairs(sk, "doc_id").collect()
+    }
+    want = set()
+    for i, (ida, ha) in enumerate(rows):
+        for idb, hb in rows[i + 1:]:
+            d = bin(ha ^ hb).count("1")
+            if d <= 3:
+                want.add((min(ida, idb), max(ida, idb), d))
+    assert got == want
+    assert (1, 2, 0) in want and (7, 4, 3) not in got  # sanity on the fixture
+
+
+def test_simhash_hamming_pairs_on_corpus(spark):
+    """sf0.001 corpus: exact equivalence to the brute-force pair scan."""
+    from ubdc_airbnb_spark.operators import dedup
     from ubdc_airbnb_spark.sources.tables import load_table
 
-    docs = load_table(spark, SF, "documents")
-    out = deterministic_shuffle(docs, "doc_id", n_shards=4).select("doc_id", "shard", "position")
-    rows = out.collect()
-    assert len(rows) == docs.count()
-    by_shard: dict[int, list[int]] = {}
-    for r in rows:
-        by_shard.setdefault(r.shard, []).append(r.position)
-    assert set(by_shard) <= set(range(4))
-    for shard, positions in by_shard.items():
-        assert sorted(positions) == list(range(len(positions)))  # contiguous 0..n-1
-    # stable under repartitioning (no RNG anywhere)
-    again = deterministic_shuffle(docs.repartition(5), "doc_id", n_shards=4)
-    assert sorted(map(tuple, rows)) == sorted(
-        map(tuple, again.select("doc_id", "shard", "position").collect())
+    docs = load_table(spark, SF_DIR, "documents")
+    sk = dedup.simhash(docs, "doc_id", "text", bits=32)
+    got = {
+        (r.id_a, r.id_b, r.hamming)
+        for r in dedup.simhash_hamming_pairs(sk, "doc_id").collect()
+    }
+    vals = [(r.doc_id, r.simhash) for r in sk.collect()]
+    want = set()
+    for i, (ida, ha) in enumerate(vals):
+        for idb, hb in vals[i + 1:]:
+            d = bin(ha ^ hb).count("1")
+            if d <= 3:
+                want.add((min(ida, idb), max(ida, idb), d))
+    assert got == want
+
+
+def test_simhash_hamming_pairs_max_group_viral_cap(spark):
+    """r07: max_group drops sketch values above the member cap from pair
+    generation ENTIRELY (both the hamming-0 expansion and near-pair
+    membership) — the brute-force reference is the all-pairs scan over
+    the SURVIVING rows only; cap=None keeps full parity (tested above)."""
+    from ubdc_airbnb_spark.operators import dedup
+
+    base = 0b1011_0110_1100_0011_0101_1010_0110_1001
+    rows = (
+        [(i, base) for i in range(1, 7)]        # viral group, 6 members
+        + [(10, base ^ 0b1), (11, base ^ 0b1)]  # hamming-1 pair group of 2
+        + [(12, base ^ 0b110)]                  # hamming-2 singleton
     )
+    sk = spark.createDataFrame(rows, "doc_id long, simhash long")
+    got = {
+        (r.id_a, r.id_b, r.hamming)
+        for r in dedup.simhash_hamming_pairs(sk, "doc_id", max_group=3).collect()
+    }
+    surviving = [(i, h) for i, h in rows if i >= 10]  # the 6-group is dropped
+    want = set()
+    for i, (ida, ha) in enumerate(surviving):
+        for idb, hb in surviving[i + 1:]:
+            d = bin(ha ^ hb).count("1")
+            if d <= 3:
+                want.add((min(ida, idb), max(ida, idb), d))
+    assert got == want
+    assert (10, 11, 0) in got         # small groups keep their pairs
+    assert not any(a <= 6 or b <= 6 for a, b, _ in got)  # viral group gone
+
+
+# --------------------------------------------------- clusters and LSH caps
 
 
 def test_canonical_per_cluster_picks_best_and_counts(spark):
@@ -113,6 +178,9 @@ def test_lsh_viral_bucket_cap(spark):
     # and the dropped cluster is exactly what the O(B) exact pass resolves
     ex = exact_duplicates(docs, "doc_id", "text").filter(F.col("n_docs") > 1).collect()
     assert len(ex) == 1 and ex[0].n_docs == 40 and ex[0].keep_id == 0
+
+
+# ------------------------------------------------------ digest contraction
 
 
 _CONTRACTION_BASE = [
@@ -182,8 +250,7 @@ def test_minhash_lsh_contraction_equivalence(spark):
 
 def test_lsh_jaccard_contraction_equivalence(spark):
     """r08: contracted candidates + rep-level jaccard verify vs the
-    naive composition the gate ran through r07 — full-row set equality,
-    both verify join strategies."""
+    naive composition the gate ran through r07 — full-row set equality."""
     from ubdc_airbnb_spark.functions.textstats import word_ngrams_expr
     from ubdc_airbnb_spark.operators.dedup import lsh_jaccard_pairs
 
@@ -222,15 +289,6 @@ def test_lsh_jaccard_contraction_equivalence(spark):
         for r in lsh_jaccard_pairs(docs, "doc_id", "text", 16, 4, 3, 0.3).collect()
     }
     assert got == naive
-    # r09: the prefiltered-grams verify variant is a pure plan-shape
-    # change (grams only for reps appearing in a candidate pair)
-    pre = {
-        tuple(r)
-        for r in lsh_jaccard_pairs(
-            docs, "doc_id", "text", 16, 4, 3, 0.3, prefilter_grams=True
-        ).collect()
-    }
-    assert pre == naive
     # sanity: the 0/0 degenerate pairs are IN (naive semantics), and
     # within-group rows carry inter == union_n (J = 1)
     zero = {t for t in naive if t[2] == 0}
@@ -281,22 +339,3 @@ def test_digest_max_group_composition(spark):
         assert capped.filter("id_a = 100 and id_b = 101").count() == 1
     ex = exact_duplicates(docs, "doc_id", "text").filter(F.col("n_docs") > 1)
     assert {(r.keep_id, r.n_docs) for r in ex.collect()} == {(0, 40), (100, 2)}
-
-
-def test_temperature_mix_boosts_small_sources(spark):
-    """α=0.5 sampling must pick a HIGHER rate for a small source than a
-    large one, and the realized counts must track rate·n."""
-    from ubdc_airbnb_spark.operators.sampling import temperature_mix
-
-    rows = [(i, "big") for i in range(900)] + [(i + 1000, "small") for i in range(400)]
-    df = spark.createDataFrame(rows, "doc_id long, src string")
-    out = temperature_mix(df, "src", "doc_id", target_fraction=0.5)
-    rates = {r.src: r.rate_ppm for r in out.select("src", "rate_ppm").distinct().collect()}
-    # proportional-to-sqrt: rate ∝ sqrt(n)/n, so small/big = (20/400)/(30/900) = 1.5
-    assert abs(rates["small"] / rates["big"] - 1.5) < 1e-5
-    picked = {r[0]: r[1] for r in out.groupBy("src").count().collect()}
-    for src, n in (("big", 900), ("small", 400)):
-        assert abs(picked[src] - n * rates[src] / 1e6) < 0.15 * n  # hash-uniformity tolerance
-    # determinism across partitionings
-    again = temperature_mix(df.repartition(7), "src", "doc_id", target_fraction=0.5)
-    assert sorted(r.doc_id for r in out.collect()) == sorted(r.doc_id for r in again.collect())

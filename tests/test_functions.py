@@ -1,5 +1,5 @@
 """Scalar-function tests: hashing parity with DuckDB, fingerprints vs a
-Python oracle, text statistics on crafted inputs."""
+Python oracle, text statistics on crafted inputs, URL canonicalization."""
 
 from __future__ import annotations
 
@@ -80,3 +80,63 @@ def test_char_and_word_ngrams_edges(spark):
     assert got[1] == ([], [])  # shorter than n
     assert got[2][0] == ["abc", "bcd"]
     assert got[3][1] == ["a b c", "b c d"]
+
+
+# --------------------------------------------------------- charset profile
+
+
+def test_script_profile_counts(spark):
+    df = spark.createDataFrame([("ab1 \tZ",)], "text string")
+    row = df.select(*textstats.script_profile("text")).collect()[0]
+    assert row.n_chars_total == 6
+    assert row.n_ascii_letters == 3
+    assert row.n_digits == 1
+    assert row.n_whitespace == 2
+    assert row.n_non_ascii == 0
+    assert row.ascii_letter_ratio == 0.5
+
+
+def test_mojibake_gate(spark):
+    df = spark.createDataFrame(
+        [("clean english text", False), ("éééé x", True)],
+        "text string, want boolean",
+    )
+    got = df.select("want", textstats.is_mojibake_suspect("text").alias("sus")).collect()
+    for r in got:
+        assert r.sus == r.want
+
+
+# ---------------------------------------------------- URL canonicalization
+
+
+def test_canonical_url_variants_collapse(spark):
+    from ubdc_airbnb_spark.functions import urltools
+
+    df = spark.createDataFrame(
+        [
+            ("HTTPS://Example.COM/a/?b=2&a=1&utm_source=x#frag",),
+            ("https://example.com/a?a=1&b=2&fbclid=zzz",),
+            ("https://example.com/a?a=1&b=2",),
+        ],
+        "url string",
+    )
+    got = df.select(urltools.canonical_url("url").alias("c")).distinct().collect()
+    assert len(got) == 1
+    assert got[0].c == "https://example.com/a?a=1&b=2"
+
+
+def test_canonical_url_keeps_non_tracking_and_empty_query(spark):
+    from ubdc_airbnb_spark.functions import urltools
+
+    df = spark.createDataFrame(
+        [
+            ("http://h.io/p?utm_campaign=c",),   # only tracking -> no query
+            ("http://h.io/p",),
+            ("http://h.io/p?id=7",),            # non-tracking survives
+        ],
+        "url string",
+    )
+    got = [r.c for r in df.select(urltools.canonical_url("url").alias("c")).collect()]
+    assert got[0] == "http://h.io/p"
+    assert got[1] == "http://h.io/p"
+    assert got[2] == "http://h.io/p?id=7"

@@ -864,3 +864,25 @@ def test_rank_filter_rescue_fires_only_on_raw_rank(spark):
     )
     assert "WindowGroupLimit" in _plan(rescued_p)
     assert "WindowGroupLimit" not in _plan(defeated_p)
+
+
+def test_prefixsum_auto_picks_single_below_threshold(spark, monkeypatch):
+    """auto = stats-driven physical choice: tiny input -> plain global
+    window (no percentile job, no bucket column); forced/large ->
+    two-pass. Results identical."""
+    from ubdc_airbnb_spark.operators import prefixsum
+
+    df = spark.createDataFrame([(i, i % 7 + 1) for i in range(100)], "id long, v long")
+    single = prefixsum.partitioned_cumsum(
+        df, order=[F.col("id")], value=F.col("v"), out_col="c", bucket_key=F.col("id")
+    )
+    # tiny input: the plan must NOT contain the bucket machinery
+    assert "__rb" not in single.columns
+    plan = single._jdf.queryExecution().executedPlan().toString()
+    assert "percentile" not in plan.lower()
+
+    monkeypatch.setattr(prefixsum, "SINGLE_PARTITION_MAX_BYTES", -1)
+    two = prefixsum.partitioned_cumsum(
+        df, order=[F.col("id")], value=F.col("v"), out_col="c", bucket_key=F.col("id")
+    )
+    assert sorted(single.collect()) == sorted(two.collect())

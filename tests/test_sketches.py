@@ -1,4 +1,5 @@
-"""Portable HLL sketch: accuracy, merge algebra, O(m) state."""
+"""Sketches: portable HLL accuracy, merge algebra and O(m) state;
+histogram quantiles, heavy hitters and KMV."""
 
 from __future__ import annotations
 
@@ -134,3 +135,141 @@ def test_profile_table_counts_and_nulls(spark):
     # 2 distinct non-null values; HLL at this size is exact-ish
     assert abs(got["v"].n_distinct_est - 2) < 0.5
     assert abs(got["id"].n_distinct_est - 4) < 1.0
+
+
+# ----------------------------------------------- histogram quantile sketch
+
+
+def test_histogram_quantiles_within_width(spark):
+    vals = spark.range(1, 10_001).select((F.col("id") * 3.7).alias("v"))
+    width = 50.0
+    sk = sketches.histogram_sketch(vals, "v", width)
+    est = {r.q: r.est for r in sketches.histogram_quantiles(sk, width).collect()}
+    exact = vals.selectExpr(
+        "percentile_cont(0.5) WITHIN GROUP (ORDER BY v) AS p50",
+        "percentile_cont(0.9) WITHIN GROUP (ORDER BY v) AS p90",
+        "percentile_cont(0.99) WITHIN GROUP (ORDER BY v) AS p99",
+    ).collect()[0]
+    assert abs(est[0.5] - exact.p50) <= width
+    assert abs(est[0.9] - exact.p90) <= width
+    assert abs(est[0.99] - exact.p99) <= width
+
+
+def test_histogram_sketch_merges(spark):
+    a = spark.range(0, 500).select((F.col("id") * 1.0).alias("v"))
+    b = spark.range(500, 1000).select((F.col("id") * 1.0).alias("v"))
+    both = a.unionByName(b)
+    merged = (
+        sketches.histogram_sketch(a, "v", 10.0)
+        .unionByName(sketches.histogram_sketch(b, "v", 10.0))
+        .groupBy("bucket")
+        .agg(F.sum("cnt").alias("cnt"))
+    )
+    direct = sketches.histogram_sketch(both, "v", 10.0)
+    assert {tuple(r) for r in merged.collect()} == {tuple(r) for r in direct.collect()}
+
+
+# ----------------------------------------------------------- heavy hitters
+
+
+def test_heavy_hitters_matches_plain_having(spark):
+    df = spark.range(0, 4000).select(
+        F.col("id").alias("event_id"),
+        # five hot keys (400 rows each), long tail of singletons
+        F.when(F.col("id") % 2 == 0, (F.col("id") % 10).cast("string"))
+        .otherwise(F.concat(F.lit("tail"), F.col("id").cast("string")))
+        .alias("k"),
+    )
+    from ubdc_airbnb_spark.operators.sketches import heavy_hitters
+
+    got = {
+        (r.k, r.cnt)
+        for r in heavy_hitters(
+            df, "k", F.col("event_id").cast("string"), threshold=100
+        ).collect()
+    }
+    want = {
+        (r.k, r.cnt)
+        for r in df.groupBy("k").agg(F.count(F.lit(1)).alias("cnt")).filter("cnt >= 100").collect()
+    }
+    assert got == want
+    assert len(want) == 5
+
+
+# ------------------------------------------------- grouped sketch variants
+
+
+def test_hll_by_group_accuracy(spark):
+    from ubdc_airbnb_spark.operators import sketches
+
+    df = spark.range(0, 20_000).select(
+        (F.col("id") % 4).alias("g"),
+        # group g has ~ (g+1)*500 distinct keys
+        (F.col("id") % ((F.col("id") % 4 + 1) * 500)).cast("string").alias("k"),
+    )
+    regs = sketches.hll_registers_by(df, ["g"], "k", b=12)
+    est = {r.g: r.est for r in sketches.hll_estimate_by(regs, ["g"], b=12).collect()}
+    exact = {
+        r.g: r.n for r in df.groupBy("g").agg(F.countDistinct("k").alias("n")).collect()
+    }
+    for g, n in exact.items():
+        assert abs(est[g] - n) / n < 0.15, (g, est[g], n)
+
+
+def test_grouped_quantile_sketch_within_width(spark):
+    from ubdc_airbnb_spark.operators import sketches
+
+    df = spark.range(1, 10_001).select(
+        (F.col("id") % 3).alias("g"), (F.col("id") * 2.0).alias("v")
+    )
+    width = 40.0
+    sk = (
+        df.select("g", F.floor(F.col("v") / width).cast("long").alias("bucket"))
+        .groupBy("g", "bucket")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
+    est = {
+        (r.g, r.q): r.est
+        for r in sketches.histogram_quantiles_by(sk, ["g"], width, qs=(0.5, 0.95)).collect()
+    }
+    exact = df.groupBy("g").agg(
+        F.expr("percentile_disc(0.5) WITHIN GROUP (ORDER BY v)").alias("p50"),
+        F.expr("percentile_disc(0.95) WITHIN GROUP (ORDER BY v)").alias("p95"),
+    ).collect()
+    # bound is vs the discrete percentile (an actual data value): the
+    # sketch returns its bucket's upper edge, <= width away
+    for r in exact:
+        assert abs(est[(r.g, 0.5)] - r.p50) <= width
+        assert abs(est[(r.g, 0.95)] - r.p95) <= width
+
+
+# -------------------------------------------------------------- KMV sketch
+
+
+def test_kmv_estimate_accuracy(spark):
+    from ubdc_airbnb_spark.operators import sketches
+
+    df = spark.range(0, 5000).select(F.col("id").cast("string").alias("k"))
+    est = sketches.kmv_estimate(sketches.kmv_sketch(df, "k", k=256), k=256).collect()[0]
+    assert abs(est.est - 5000) / 5000 < 0.2  # ~1/sqrt(k) ≈ 6% expected
+
+
+def test_kmv_small_set_is_exact(spark):
+    from ubdc_airbnb_spark.operators import sketches
+
+    df = spark.range(0, 40).select(F.col("id").cast("string").alias("k"))
+    est = sketches.kmv_estimate(sketches.kmv_sketch(df, "k", k=256), k=256).collect()[0]
+    assert est.est == 40.0
+
+
+def test_kmv_intersection_accuracy(spark):
+    from ubdc_airbnb_spark.operators import sketches
+
+    # |A|=3000 (0..2999), |B|=3000 (1500..4499), |A∩B|=1500, |A∪B|=4500
+    a = spark.range(0, 3000).select(F.col("id").cast("string").alias("k"))
+    b = spark.range(1500, 4500).select(F.col("id").cast("string").alias("k"))
+    sa = sketches.kmv_sketch(a, "k", k=256)
+    sb = sketches.kmv_sketch(b, "k", k=256)
+    row = sketches.kmv_intersection_estimate(sa, sb, k=256).collect()[0]
+    assert abs(row.union_est - 4500) / 4500 < 0.25
+    assert abs(row.intersection_est - 1500) / 1500 < 0.4  # Jaccard noise adds up

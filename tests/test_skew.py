@@ -12,6 +12,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from ubdc_airbnb_spark.operators import skew
 from ubdc_airbnb_spark.operators.joins import salted_join
 
 
@@ -123,3 +124,56 @@ def test_join_size_estimate_matches_actual_join(spark):
     assert r.join_rows == actual == 3 * 2 + 1 * 1
     assert r.n_matching_keys == 2
     assert (r.max_key_rows, r.max_key) == (6, "1")
+
+
+# -------------------------------------------- salted two-phase aggregation
+
+
+def test_salted_agg_matches_plain(spark):
+    df = spark.range(0, 5000).select(
+        F.col("id").alias("row_id"),
+        # one hot key holding ~80% of rows + a long tail
+        F.when(F.col("id") % 5 != 0, F.lit("hot")).otherwise(
+            F.concat(F.lit("t"), (F.col("id") % 97).cast("string"))
+        ).alias("key"),
+        (F.col("id") % 13).cast("double").alias("v"),
+    )
+    got = {
+        (r.key, r.n, float(r.s), r.lo, r.hi)
+        for r in skew.salted_agg(
+            df,
+            ["key"],
+            "row_id",
+            [
+                skew.count_agg("n"),
+                skew.sum_agg(F.col("v").cast("decimal(18,2)"), "s"),
+                skew.min_agg("v", "lo"),
+                skew.max_agg("v", "hi"),
+            ],
+        ).collect()
+    }
+    want = {
+        (r.key, r.n, float(r.s), r.lo, r.hi)
+        for r in df.groupBy("key")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.col("v").cast("decimal(18,2)")).alias("s"),
+            F.min("v").alias("lo"),
+            F.max("v").alias("hi"),
+        )
+        .collect()
+    }
+    assert got == want
+
+
+def test_salted_agg_spreads_hot_key(spark):
+    """Phase-1 output must contain multiple salt partials for the hot key."""
+    df = spark.range(0, 1000).select(
+        F.col("id").alias("row_id"), F.lit("hot").alias("key"), F.lit(1.0).alias("v")
+    )
+    from ubdc_airbnb_spark.functions.hashing import md5_long
+
+    partial = df.groupBy(
+        "key", (md5_long("row_id", salt="skew") % 16).alias("__salt")
+    ).count()
+    assert partial.count() == 16  # all fanout slots used at n=1000

@@ -1,6 +1,6 @@
-"""Tests for the round-2 text-pipeline operators: sliding-window
-chunking, PII redaction, random-hyperplane LSH, corpus mixing, and
-token-budget curation."""
+"""Tests for the text-pipeline operators: sliding-window chunking,
+sequence packing, PII redaction, random-hyperplane LSH, corpus mixing,
+and token-budget curation."""
 
 from __future__ import annotations
 
@@ -213,3 +213,21 @@ def test_bm25_ranking_sanity(spark):
     assert ids[-1] == 2
     assert [r.rank for r in out] == [1, 2, 3]
     assert all(out[i].score >= out[i + 1].score for i in range(len(out) - 1))
+
+
+# -------------------------------------------------------- sequence packing
+
+
+def test_sequence_pack_budget_invariants(spark):
+    from ubdc_airbnb_spark.operators import chunking
+
+    df = spark.range(0, 200).select(
+        F.col("id").alias("doc_id"), (F.col("id") % 97 + 1).alias("toks")
+    )
+    out = chunking.sequence_pack(df, "doc_id", F.col("toks"), budget=128).collect()
+    by_id = sorted(out, key=lambda r: r.doc_id)
+    stream = 0
+    for r in by_id:
+        assert r.pack_id == stream // 128
+        assert r.pack_offset == stream % 128
+        stream += r.n_tokens

@@ -349,19 +349,6 @@ def _digest_groups(
     )
 
 
-def _self_pairs(g: DataFrame) -> DataFrame:
-    """(vid, vid) value pairs for multi-member groups — within-group
-    member pairs are expanded through the SAME pipeline as cross-group
-    pairs (``_expand_pairs``), so the within branch reuses the
-    (min, collect_list) aggregate instead of forcing a third pruned
-    variant (column pruning specializes otherwise-identical aggregates
-    per branch, defeating exchange reuse — the r08 A/B measured the
-    naively-branched plan at 5 scans of the corpus)."""
-    return g.filter(F.size("__mids") > 1).select(
-        F.col("__vid").alias("vid_a"), F.col("__vid").alias("vid_b")
-    )
-
-
 def _contracted_band_join(
     g: DataFrame,
     num_perm: int,
@@ -591,8 +578,6 @@ def lsh_jaccard_pairs(
     shingle: str = "word",
     max_group: int | None = None,
     max_bucket: int | None = None,
-    verify_broadcast: bool = False,
-    prefilter_grams: bool = False,
 ) -> DataFrame:
     """Digest-contracted LSH candidates + exact word-n-gram Jaccard
     verify — set-identical to the production composition (LSH candidate
@@ -611,13 +596,12 @@ def lsh_jaccard_pairs(
     and joined into both verify sides (an r08 A/B that carried the gram
     arrays through the band join instead re-evaluated the gram
     transform per branch and per pushed-down predicate, +1.5 s at
-    sf0.1). Default SHUFFLE_HASH (``verify_broadcast=False``): the gram
-    table derives from the digest aggregate whose size estimate lies
-    structurally, and on a real corpus it is distinct-texts-sized — a
-    forced broadcast is the class-1 driver-OOM hazard (caught by the
-    r08 plan-audit ratchet; bench A/B puts the two strategies within
-    noise of each other at sf0.1). ``verify_broadcast=True`` remains
-    for callers whose rep table is known-small.
+    sf0.1). Both verify joins are SHUFFLE_HASH: the gram table derives
+    from the digest aggregate whose size estimate lies structurally, and
+    on a real corpus it is distinct-texts-sized — a forced broadcast is
+    the class-1 driver-OOM hazard (caught by the r08 plan-audit ratchet;
+    bench A/B puts the two strategies within noise of each other at
+    sf0.1).
 
     ``max_bucket`` (r09, ADVICE cap-parity fix): the viral NEAR-dup
     bucket guard, same member-weighted semantics as
@@ -661,29 +645,6 @@ def lsh_jaccard_pairs(
     # the shared threshold filter keeps/drops them exactly as the naive
     # per-member verify would (including the 0/0 ≥ 0 edge for gram-less
     # docs and the threshold > 1 rejection)
-    reps = g
-    if prefilter_grams:
-        # verify-side reduction (r09 A/B variant): compute grams only
-        # for reps that actually appear in a candidate pair. Shrinks the
-        # gram build/shuffle when candidates are sparse, at the price of
-        # a second traversal of the band-join subtree (the vid set
-        # derives from the candidate union) — the A/B decides whether
-        # that trade wins
-        selfp = gs.filter("size(__mids) > 1").selectExpr(
-            "__vid AS vid_a", "__vid AS vid_b", "__mids AS __ma", "__mids AS __mb"
-        )
-        allp = pairs.unionByName(selfp)
-        vids = (
-            allp.selectExpr("vid_a AS __vid")
-            .unionByName(allp.selectExpr("vid_b AS __vid"))
-            .distinct()
-        )
-        reps = g.join(vids.hint("shuffle_hash"), "__vid", "semi")
-    hint = (
-        "/*+ BROADCAST(ga), BROADCAST(gb) */"
-        if verify_broadcast
-        else "/*+ SHUFFLE_HASH(ga), SHUFFLE_HASH(gb) */"
-    )
     # union + verify + member double-explode as ONE parse (r11): every
     # CTE below is single-reference except `grams` (which was already a
     # multi-reference inlined CTE in the two-call form), so the logical
@@ -707,7 +668,7 @@ def lsh_jaccard_pairs(
           SELECT __vid, array_distinct({g_arr}) AS gr FROM toks
         ),
         verified AS (
-          SELECT {hint}
+          SELECT /*+ SHUFFLE_HASH(ga), SHUFFLE_HASH(gb) */
                  p.vid_a, p.vid_b, p.__ma, p.__mb,
                  CAST(size(array_intersect(ga.gr, gb.gr)) AS BIGINT) AS inter,
                  CAST(size(ga.gr) + size(gb.gr)
@@ -729,17 +690,7 @@ def lsh_jaccard_pairs(
         """,
         pairs=pairs,
         gs=gs,
-        reps=reps,
-    )
-
-
-def minhash_jaccard(sigs_a: str = "sig_a", sigs_b: str = "sig_b") -> F.Column:
-    """Estimated Jaccard from two signature arrays: fraction of agreeing
-    positions."""
-    return (
-        F.size(F.filter(F.zip_with(F.col(sigs_a), F.col(sigs_b), lambda x, y: x == y), lambda v: v))
-        .cast("double")
-        / F.size(F.col(sigs_a)).cast("double")
+        reps=g,
     )
 
 
@@ -979,17 +930,6 @@ def simhash_hamming_pairs(
         )
     )
     return zero.unionByName(near)
-
-
-def hamming_distance(a: str = "simhash_a", b: str = "simhash_b", bits: int = 32) -> F.Column:
-    """Popcount of XOR via bit explosion (no UDF)."""
-    x = F.col(a).bitwiseXOR(F.col(b))
-    return F.aggregate(
-        F.sequence(F.lit(0), F.lit(bits - 1)),
-        F.lit(0),
-        lambda acc, i: acc
-        + F.call_function("shiftright", x, i.cast("int")).bitwiseAND(F.lit(1)).cast("int"),
-    )
 
 
 def ngram_jaccard_pairs(

@@ -121,32 +121,31 @@ def unpin(df: DataFrame) -> bool:
     entry behind, so a later ``_pin`` of a semantically identical plan
     would return the already-dead handle (believing it cached) and every
     downstream pass would silently recompute the full upstream — the
-    exact quadratic recompute pinning exists to prevent."""
+    exact quadratic recompute pinning exists to prevent. A failed
+    unpersist propagates and leaves the entry registered. Returns
+    whether ``df`` was a registered pin."""
+    df.unpersist(blocking=False)
     hit = False
     for key, cached in list(_PINNED.items()):
         if cached is df:
             del _PINNED[key]
             hit = True
-    try:
-        df.unpersist(blocking=False)
-    except Exception:
-        return hit
-    return True
+    return hit
 
 
 def release_pins() -> int:
-    """Unpersist every live ``_pin`` handle (non-blocking) and clear the
-    registry; returns how many were released. Call after the terminal
-    action of a query — the gate runner, bench harness, and report CLI
-    all do, so a multi-query session holds at most one query's pins."""
+    """Unpersist every live ``_pin`` handle (non-blocking) and drop it
+    from the registry; returns how many were released. Call after the
+    terminal action of a query — the gate runner, bench harness, and
+    report CLI all do, so a multi-query session holds at most one
+    query's pins. An entry leaves the registry only once its unpersist
+    succeeds: a failure propagates and the entry stays registered, so a
+    leaked cache entry is never hidden."""
     n = 0
-    for df in _PINNED.values():
-        try:
-            df.unpersist(blocking=False)
-            n += 1
-        except Exception:
-            pass
-    _PINNED.clear()
+    for key, df in list(_PINNED.items()):
+        df.unpersist(blocking=False)
+        del _PINNED[key]
+        n += 1
     return n
 
 

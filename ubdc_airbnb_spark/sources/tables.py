@@ -48,15 +48,6 @@ def warm_cache(spark: SparkSession, sf_dir: str, partitions: int | None = None) 
         _CACHE[(sf_dir, name)] = df
 
 
-def clear_cache() -> None:
-    for df in _CACHE.values():
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    _CACHE.clear()
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str, use_cache: bool = True) -> DataFrame:
     """Read one parquet table (served from the warm cache when primed).
 

@@ -24,25 +24,6 @@ from pyspark.sql import functions as F
 from ..operators.upsert import upsert_parquet
 
 
-def events_stream(spark: SparkSession, src_dir: str) -> DataFrame:
-    """File-source stream over an events parquet directory (schema fixed
-    up front — streaming sources don't infer)."""
-    import pyarrow.parquet as pq
-
-    import glob
-    import os
-
-    sample = sorted(glob.glob(os.path.join(src_dir, "*.parquet")))[0]
-    has_ns = any(str(f.type) == "timestamp[ns]" for f in pq.read_schema(sample))
-    if has_ns:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    static = spark.read.parquet(src_dir)
-    stream = spark.readStream.schema(static.schema).parquet(src_dir)
-    if has_ns and dict(static.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return stream
-
-
 def windowed_counts(
     stream: DataFrame,
     window: str = "10 minutes",
