@@ -41,12 +41,34 @@ def _bronze_df(spark, items, _type="SRH"):
 # ------------------------------------------------------------ discovery
 
 
+def _single_page_api() -> MockAirbnbApi:
+    api = MockAirbnbApi(auto=False)
+    api.enqueue(200, payloads.search_payload(QK, has_next_page=False, number_of_listings=10))
+    return api
+
+
+def _split_api() -> MockAirbnbApi:
+    api = MockAirbnbApi(auto=False)
+    api.enqueue(200, payloads.search_payload(QK, has_next_page=True))
+    for d in "0123":
+        api.enqueue(200, payloads.search_payload(QK + d, has_next_page=False, number_of_listings=5))
+    return api
+
+
+DEEP = QK + "0" * 12  # depth 22
+
+
+def _depth_cap_api() -> MockAirbnbApi:
+    api = MockAirbnbApi(auto=False)
+    api.enqueue(200, payloads.search_payload(DEEP, has_next_page=True, items_offset=0))
+    api.enqueue(200, payloads.search_payload(DEEP, has_next_page=False, items_offset=10))
+    return api
+
+
 def test_discovery_single_page_registers_listings(spark):
     """ref test_task_register_listings_or_divide_at_quadkey.py:80-103 —
     a 1-page grid registers its listings and does not split."""
-    api = MockAirbnbApi(auto=False)
-    api.enqueue(200, payloads.search_payload(QK, has_next_page=False, number_of_listings=10))
-    res = discovery.discover(spark, api, [QK])
+    res = discovery.discover(spark, _single_page_api(), [QK])
     assert res.waves == 1 and res.fetches == 1
     assert res.splits == []
     assert res.listings.count() == 10
@@ -60,11 +82,7 @@ def test_discovery_single_page_registers_listings(spark):
 def test_discovery_paginated_grid_splits_into_4(spark):
     """ref :16-46 — pagination below max depth → split into exactly 4
     children, children fetched next wave."""
-    api = MockAirbnbApi(auto=False)
-    api.enqueue(200, payloads.search_payload(QK, has_next_page=True))
-    for d in "0123":
-        api.enqueue(200, payloads.search_payload(QK + d, has_next_page=False, number_of_listings=5))
-    res = discovery.discover(spark, api, [QK])
+    res = discovery.discover(spark, _split_api(), [QK])
     assert res.splits == [QK]
     assert res.waves == 2 and res.fetches == 5
     grids = {r.quadkey for r in res.grids.collect()}
@@ -75,14 +93,32 @@ def test_discovery_paginated_grid_splits_into_4(spark):
 def test_discovery_at_max_depth_follows_pagination(spark):
     """ref :16-46 deep-grid case — at MAX_GRID_LEVEL pagination is
     followed, no split."""
-    deep = QK + "0" * 12  # depth 22
-    api = MockAirbnbApi(auto=False)
-    api.enqueue(200, payloads.search_payload(deep, has_next_page=True, items_offset=0))
-    api.enqueue(200, payloads.search_payload(deep, has_next_page=False, items_offset=10))
-    res = discovery.discover(spark, api, [deep], max_level=22)
+    res = discovery.discover(spark, _depth_cap_api(), [DEEP], max_level=22)
     assert res.splits == []
     assert res.fetches == 2
-    assert res.grids.collect()[0].quadkey == deep
+    assert res.grids.collect()[0].quadkey == DEEP
+
+
+@pytest.mark.parametrize(
+    "make_api, seed, waves, depth_cap_pages",
+    [(_single_page_api, QK, [1], [0]), (_split_api, QK, [1, 4], [0, 0]),
+     (_depth_cap_api, DEEP, [1, 1], [1, 0])],
+    ids=["single_page", "split", "depth_cap"],
+)
+def test_discovery_wave_stats_match_fetches_and_splits(
+    spark, make_api, seed, waves, depth_cap_pages
+):
+    """The per-wave counters add up to the run's fetches and splits."""
+    res = discovery.discover(spark, make_api(), [seed], max_level=22)
+    stats = res.wave_stats
+    assert [w["wave"] for w in stats] == list(range(1, res.waves + 1))
+    assert [w["frontier"] for w in stats] == waves
+    assert sum(w["frontier"] for w in stats) == res.fetches
+    assert [sum(w["status"].values()) for w in stats] == waves
+    assert all(set(w["status"]) == {200} for w in stats)
+    assert sum(w["splits"] for w in stats) == len(res.splits)
+    assert [w["depth_cap_pages"] for w in stats] == depth_cap_pages
+    assert all(w["wall_s"] > 0 for w in stats)
 
 
 # ------------------------------------------------------------ extraction

@@ -25,7 +25,10 @@ their persist/unpersist-previous pattern.
 Reference behavior anchor: the reference's recursive quadtree scan
 (ubdc-airbnb src/ubdc_airbnb/ubdc_airbnb/operations/discovery.py)
 holds only the frontier, never every visited level — this is the same
-frontier-only discipline for Spark state chains.
+frontier-only discipline for Spark state chains. The engine's own
+quadtree discovery (``plans.discovery``) needs no chain: no wave reads
+the previous wave's listings, so it keeps each wave's delta as an
+immutable run and resolves the runs once after the last wave.
 """
 
 from __future__ import annotations
@@ -41,7 +44,9 @@ def plan_node_count(df: DataFrame) -> int:
     HANG (the r10 discovery MERGE at 52 waves), which no artifact or
     detector sees. tests/test_plan_ratchet.py records it for each
     ``CheckpointChain.step`` input and asserts per-step flatness for
-    every iterative site."""
+    every chained site; discovery no longer chains (its waves are
+    independent runs, resolved once), so there it bounds the one
+    resolution plan to linear growth in waves."""
     lp = df._jdf.queryExecution().analyzed()
     return lp.treeString().count("\n") + 1
 

@@ -7,11 +7,19 @@ transactional split ref utils/grids.py:107-118).
 Spark has no recursion; the reference's per-task recursion becomes
 breadth-first *waves*: the whole frontier is fetched as ONE Spark stage
 per iteration (``sources/http_fetch.fetch_batch`` — rate-limited
-``mapInPandas``, the same distributed fetch the other composed ops use),
-so one wave = one fetch stage + one bronze materialization + one listing
-MERGE + one frontier computation. Only the frontier bookkeeping — a list
-of (quadkey, offset) work items, by construction tiny relative to the
-data fetched — lives on the driver.
+``mapInPandas``, the same distributed fetch the other composed ops use).
+A wave runs a fixed handful of Spark jobs whatever the frontier size:
+the fetch barrier, one parse checkpoint (one row per response: status,
+pagination and the response's listings array) and one collect of that
+frontier-sized metadata, from which the driver builds the next frontier,
+the splits and the grid counts. Each wave's listings stay an immutable
+run tagged with the wave number; after the last wave the runs are
+resolved once — the latest wave wins — and checkpointed once, as an
+LSM store keeps immutable runs and merges them later ("Efficient Data
+Ingestion and Query Processing for LSM-Based Storage Systems", VLDB
+2019). Only the frontier bookkeeping — a list of (quadkey, offset) work
+items, by construction tiny relative to the data fetched — lives on the
+driver.
 
 Test doubles: the reference's FIFO-queue mock client is inherently
 driver-stateful, so when a :class:`MockAirbnbApi` is passed instead of a
@@ -23,14 +31,18 @@ tasks for execution.
 
 from __future__ import annotations
 
+import time
+from collections import Counter
 from dataclasses import dataclass, field
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import schemas
 from ..functions.hashing import md5_long
-from ..operators.extract import search_listings, search_pagination
-from ..operators.upsert import upsert
+from ..functions.quadkey import lonlat_to_quadkey
+from ..operators.extract import QK_DEPTH
 from ..sources.bronze import make_response_rows
 from ..sources.http_fetch import Fetcher, fetch_batch, materialize
 from ..sources.mock_api import MockAirbnbApi
@@ -55,6 +67,10 @@ class DiscoveryResult:
     waves: int = 0
     fetches: int = 0
     splits: list[str] = field(default_factory=list)
+    #: one dict per wave: frontier size, status histogram, splits,
+    #: depth-cap pages and wall seconds — read from the wave's one
+    #: metadata collect, so the counters cost no Spark job
+    wave_stats: list[dict] = field(default_factory=list)
 
 
 def _wave_fetcher(
@@ -101,6 +117,85 @@ def _wave_fetcher(
     return fetcher
 
 
+_LISTING_COLS = "listing_id long, lon double, lat double, quadkey string, host_id long, city string"
+
+#: the X1 walk of ``operators.extract.search_listings`` (explore_tabs →
+#: sections with listings → listings) as one array per response instead
+#: of exploded rows, so a wave's parse is a single narrow projection
+_LISTINGS_ARRAY = """transform(
+    flatten(transform(coalesce(__p.explore_tabs, array()),
+        t -> flatten(coalesce(transform(filter(t.sections, s -> s.listings IS NOT NULL),
+                                        s -> s.listings), array())))),
+    e -> named_struct('listing_id', e.listing.id, 'lon', e.listing.lng,
+                      'lat', e.listing.lat, 'host_id', e.listing.user.id,
+                      'city', e.listing.city))"""
+
+
+def _parse_wave(bronze: DataFrame) -> DataFrame:
+    """One row per response: request, status, pagination (X3) and the
+    listings array (X1). Failed responses keep their row — they finalize
+    their grid — but carry no pagination and no listings. ``n_listings``
+    counts distinct non-NULL ids, as ``countDistinct`` did."""
+    ok = F.col("was_successful")
+    tab0 = F.col("__p.explore_tabs")[0]["pagination_metadata"]
+    ids = F.filter(F.transform("listings", lambda l: l["listing_id"]), lambda i: i.isNotNull())
+    return (
+        bronze.withColumn("__p", F.from_json("payload", schemas.SEARCH_PAYLOAD))
+        .select(
+            "quadkey",
+            F.col("items_offset").alias("req_offset"),
+            "status_code",
+            "was_successful",
+            F.when(ok, tab0["has_next_page"]).alias("has_next_page"),
+            F.when(ok, tab0["items_offset"]).alias("next_offset"),
+            F.when(ok, F.expr(_LISTINGS_ARRAY)).alias("listings"),
+        )
+        .withColumn("n_listings", F.when(ok, F.size(F.array_distinct(ids))).otherwise(0))
+    )
+
+
+def _resolve(waves: list[DataFrame]) -> DataFrame:
+    """Merge the waves' listing runs once. A run is one parsed wave's
+    listings, one row per entry, tagged with the wave number and the
+    entry's position: response quadkey, request offset, array position.
+    Per listing id the latest wave wins; within a wave the smallest
+    position. A NULL id is no key — it never replaces another row — so
+    each wave keeps one NULL-id row, as the per-wave ``dropDuplicates``
+    + anti-join MERGE did."""
+    runs = reduce(
+        DataFrame.unionByName,
+        (
+            parsed.select(
+                F.lit(wave).alias("wave"),
+                "quadkey",
+                "req_offset",
+                F.posexplode("listings").alias("pos", "l"),
+            )
+            for wave, parsed in enumerate(waves, 1)
+        ),
+    )
+    lid = F.col("l.listing_id")
+    order = Window.partitionBy(lid, F.when(lid.isNull(), F.col("wave"))).orderBy(
+        F.desc("wave"), "quadkey", "req_offset", "pos"
+    )
+    winners = runs.withColumn("__rank", F.row_number().over(order)).filter("__rank = 1")
+    return winners.select("l.*").select(
+        "listing_id",
+        "lon",
+        "lat",
+        lonlat_to_quadkey("lon", "lat", QK_DEPTH).alias("quadkey"),
+        "host_id",
+        "city",
+    )
+
+
+def _release(checkpointed: DataFrame) -> None:
+    """Free a ``localCheckpoint``'s blocks now instead of at the driver's
+    next garbage collection."""
+    rdd = checkpointed._jdf.queryExecution().analyzed().rdd()
+    checkpointed.sparkSession.sparkContext._jsc.sc().unpersistRDD(rdd.id(), False)
+
+
 def discover(
     spark: SparkSession,
     source: Fetcher | MockAirbnbApi,
@@ -114,31 +209,29 @@ def discover(
 
     Per wave, the whole frontier of (quadkey, items_offset) work items is
     fetched as one ``fetch_batch`` stage (Spark tasks, rate-limited per
-    partition), then: bronze rows → extract listings (X1) + pagination
-    (X3) → three-way branch per the reference (ref tasks.py:266-309):
+    partition) behind a ``materialize`` barrier; the bronze rows are
+    parsed once into a checkpoint of one row per response, and one
+    collect of its metadata drives the three-way branch per the
+    reference (ref tasks.py:266-309):
 
     - paginated and ``len(qk) < max_level`` → replace grid with its 4
       children (next wave fetches them at offset 0) — T7;
     - paginated at max depth → continue with the next page offset — T8;
     - not paginated → grid finalized; record ``estimated_listings``.
-    """
-    from ..operators.iterstate import CheckpointChain
 
+    The listings are resolved from all waves' runs once, after the loop,
+    and returned checkpointed.
+    """
     frontier: list[tuple[str, int]] = sorted((qk, 0) for qk in seed_quadkeys)
     bronze_parts: list[DataFrame] = []
-    all_listings: DataFrame | None = None
+    parsed_waves: list[DataFrame] = []
     grid_rows: dict[str, int] = {}  # quadkey -> estimated listings
     splits: list[str] = []
+    wave_stats: list[dict] = []
     waves = fetches = 0
-    # the accumulated-listings MERGE references its previous state twice
-    # (anti-join + union), so an un-severed chain DOUBLES the logical
-    # plan per wave: a deep pagination chain (40+ waves at the depth
-    # cap — the real city-center case) pins Catalyst analysis at 100%
-    # of one core before any task runs (r10 hot-tile smoke finding).
-    # CheckpointChain keeps the state bounded at O(1) generations.
-    chain = CheckpointChain(spark)
 
     while frontier and waves < max_waves:
+        t0 = time.perf_counter()
         waves += 1
         fetches += len(frontier)
         fetcher = _wave_fetcher(source, frontier)
@@ -167,95 +260,75 @@ def discover(
             F.col("key").alias("quadkey"),
             F.col("offset").cast("int").alias("items_offset"),
         )
-        bronze = make_response_rows(raw.drop("quadkey", "items_offset")).join(
-            raw.select("response_id", "quadkey", "items_offset"), "response_id"
-        )
+        bronze = make_response_rows(raw, "quadkey", "items_offset")
         bronze_parts.append(bronze)
 
-        ok = bronze.filter(F.col("was_successful"))
-        wave_listings = search_listings(ok).join(
-            ok.select("response_id", F.col("quadkey").alias("grid_qk")), "response_id"
-        )
-        wave_new = wave_listings.select(
-            "listing_id", "lon", "lat", "quadkey", "host_id", "city"
-        ).dropDuplicates(["listing_id"])
-        all_listings = chain.step(
-            wave_new
-            if all_listings is None
-            else upsert(all_listings, wave_new, ["listing_id"])
-        )
-        chain.retire(keep=1)
+        # parse once: every later read of this wave starts here. The
+        # checkpoint is lazy — the metadata collect below computes and
+        # stores it, one job for both
+        parsed = _parse_wave(bronze).localCheckpoint(eager=False)
+        parsed_waves.append(parsed)
 
-        # frontier bookkeeping: one collect of frontier-sized metadata
-        # (pagination flags + per-grid counts), never listing-scale data
-        meta_rows = (
-            search_pagination(ok)
-            .select(
-                "response_id",
-                "has_next_page",
-                F.col("items_offset").alias("next_offset"),
-            )
-            .join(
-                ok.select(
-                    "response_id", "quadkey", F.col("items_offset").alias("req_offset")
-                ),
-                "response_id",
-            )
-            .collect()
-        )
-        pagination = {(r.quadkey, r.req_offset): r for r in meta_rows}
-        counts = {
-            r.grid_qk: r.n
-            for r in wave_listings.groupBy("grid_qk")
-            .agg(F.countDistinct("listing_id").alias("n"))
-            .collect()
-        }
+        # frontier bookkeeping: one collect of frontier-sized metadata,
+        # never listing-scale data
+        meta_rows = parsed.drop("listings").collect()
+        meta = {(r.quadkey, r.req_offset): r for r in meta_rows}
 
         next_frontier: list[tuple[str, int]] = []
+        wave_splits = depth_cap_pages = 0
         for qk, offset in frontier:
-            meta = pagination.get((qk, offset))
-            has_next = bool(meta and meta.has_next_page)
+            m = meta[(qk, offset)]  # every work item has a response row
+            has_next = bool(m.has_next_page)
             if has_next and len(qk) < max_level:
                 # T7: split — replace parent with 4 children (G17)
                 splits.append(qk)
+                wave_splits += 1
                 grid_rows.pop(qk, None)
                 for d in "0123":
                     next_frontier.append((qk + d, 0))
             elif has_next:
                 # T8: depth cap — follow pagination instead
-                next_offset = (
-                    int(meta.next_offset) if meta.next_offset is not None else offset + 10
-                )
-                grid_rows[qk] = grid_rows.get(qk, 0) + counts.get(qk, 0)
+                depth_cap_pages += 1
+                next_offset = int(m.next_offset) if m.next_offset is not None else offset + 10
+                grid_rows[qk] = grid_rows.get(qk, 0) + m.n_listings
                 next_frontier.append((qk, next_offset))
             else:
-                grid_rows[qk] = grid_rows.get(qk, 0) + counts.get(qk, 0)
+                grid_rows[qk] = grid_rows.get(qk, 0) + m.n_listings
+        wave_stats.append(
+            {
+                "wave": waves,
+                "frontier": len(frontier),
+                "status": dict(Counter(r.status_code for r in meta_rows)),
+                "splits": wave_splits,
+                "depth_cap_pages": depth_cap_pages,
+                "wall_s": time.perf_counter() - t0,
+            }
+        )
         frontier = sorted(next_frontier)
 
     if not bronze_parts:
         empty = spark.createDataFrame([], "quadkey string, estimated_listings long")
         return DiscoveryResult(
             bronze=spark.createDataFrame([], schemas_bronze_ddl()),
-            listings=spark.createDataFrame(
-                [], "listing_id long, lon double, lat double, quadkey string, host_id long, city string"
-            ),
+            listings=spark.createDataFrame([], _LISTING_COLS),
             grids=empty,
         )
-    bronze_all = bronze_parts[0]
-    for p in bronze_parts[1:]:
-        bronze_all = bronze_all.unionByName(p)
+    # merge once; the calendar harvest reads the listings several times,
+    # so they are returned materialized, and the parse checkpoints they
+    # came from are freed
+    listings = _resolve(parsed_waves).localCheckpoint(eager=True)
+    for parsed in parsed_waves:
+        _release(parsed)
     grids = spark.createDataFrame(
         [(qk, n) for qk, n in sorted(grid_rows.items())],
         "quadkey string, estimated_listings long",
     )
-    # the returned listings frame IS the last generation: keep it live,
-    # free everything else the chain pinned
-    chain.close(keep_last=True)
     return DiscoveryResult(
-        bronze=bronze_all,
-        listings=all_listings,
+        bronze=reduce(DataFrame.unionByName, bronze_parts),
+        listings=listings,
         grids=grids,
         waves=waves,
         fetches=fetches,
         splits=splits,
+        wave_stats=wave_stats,
     )

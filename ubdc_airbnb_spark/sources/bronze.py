@@ -20,11 +20,12 @@ from ..functions.jsonutils import sanitize_payload
 RETRIABLE_CODES = (429, 503)
 
 
-def make_response_rows(df: DataFrame) -> DataFrame:
+def make_response_rows(df: DataFrame, *carry: str) -> DataFrame:
     """Normalize raw fetch results into bronze ``responses`` rows.
 
     Input columns: response_id, listing_id, _type, status_code, body
-    (raw text), url, seconds_to_complete, task_id, created_at.
+    (raw text), url, seconds_to_complete, task_id, created_at. The
+    ``carry`` columns are passed through unchanged after the bronze ones.
     """
     is_json = F.try_parse_json(F.col("body")).isNotNull()
     payload = F.when(is_json, sanitize_payload(F.col("body"))).otherwise(
@@ -47,6 +48,7 @@ def make_response_rows(df: DataFrame) -> DataFrame:
         "task_id",
         (F.col("status_code") == 200).alias("was_successful"),  # P11 (ref models.py:401-405)
         F.col("status_code").isin(*RETRIABLE_CODES).alias("is_retriable"),  # T5
+        *carry,
     )
 
 
