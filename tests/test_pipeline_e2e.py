@@ -16,6 +16,7 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
+from ubdc_airbnb_spark.functions.quadkey import lonlat_to_quadkey
 from ubdc_airbnb_spark.operators import extract
 from ubdc_airbnb_spark.plans import discovery, harvest, ledger
 from ubdc_airbnb_spark.sources import payloads
@@ -122,6 +123,40 @@ def test_discovery_wave_stats_match_fetches_and_splits(
 
 
 # ------------------------------------------------------------ extraction
+
+
+def test_search_listings_follow_the_payload_walk(spark):
+    """X1/X3 over payloads with two tabs, sections without listings and a
+    response without tabs: one row per listing entry, in payload order,
+    with the depth-22 quadkey; pagination reads the first tab."""
+    tabs = [
+        json.loads(payloads.search_payload(QK + d, has_next_page=d == "0", number_of_listings=3))[
+            "explore_tabs"
+        ][0]
+        for d in "01"
+    ]
+    tabs[1]["sections"].append({"listings": None})
+    bodies = [json.dumps({"explore_tabs": tabs}), json.dumps({"metadata": {}})]
+    bronze = _bronze_df(spark, [(None, b) for b in bodies])
+
+    want = [
+        (0, l["id"], l["lng"], l["lat"], l["city"], l["user"]["id"])
+        for t in tabs
+        for s in t["sections"]
+        for l in (e["listing"] for e in s.get("listings") or [])
+    ]
+    got = extract.search_listings(bronze)
+    assert got.columns == ["response_id", "listing_id", "lon", "lat", "city", "host_id", "quadkey"]
+    rows = got.collect()
+    assert [tuple(r)[:6] for r in rows] == want
+    qk = spark.createDataFrame([w[2:4] for w in want], "lon double, lat double").select(
+        lonlat_to_quadkey("lon", "lat", extract.QK_DEPTH)
+    )
+    assert [r.quadkey for r in rows] == [r[0] for r in qk.collect()]
+
+    page = {r.response_id: r for r in extract.search_pagination(bronze).collect()}
+    assert (page[0].has_next_page, page[0].items_offset) == (True, 3)
+    assert page[1].has_next_page is None
 
 
 def test_calendar_extraction_and_booking_window(spark):

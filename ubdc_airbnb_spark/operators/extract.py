@@ -24,29 +24,56 @@ def _parsed(df: DataFrame, schema, payload_col: str = "payload") -> DataFrame:
     return df.withColumn("__p", F.from_json(F.col(payload_col), schema))
 
 
-def search_listings(responses: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """X1: listings (id, lat, lng) from search payloads — the
-    ``$..listing[id_str,lat,lng]`` walk (ref utils/spatial.py:153-171)
-    as explode over the declared schema. Emits the engine's depth-22
-    quadkey bucketing column."""
-    p = _parsed(responses, schemas.SEARCH_PAYLOAD, payload_col)
-    tabs = p.select(
-        "response_id", F.explode("__p.explore_tabs").alias("tab")
-    )
-    listings = (
-        tabs.select("response_id", F.explode("tab.sections").alias("sec"))
-        .filter(F.col("sec.listings").isNotNull())
-        .select("response_id", F.explode("sec.listings").alias("entry"))
-        .select(
-            "response_id",
-            F.col("entry.listing.id").alias("listing_id"),
-            F.col("entry.listing.lng").alias("lon"),
-            F.col("entry.listing.lat").alias("lat"),
-            F.col("entry.listing.city").alias("city"),
-            F.col("entry.listing.user.id").alias("host_id"),
+def search_listings_array(payload: Column) -> Column:
+    """X1 as one array per response: the ``$..listing[id_str,lat,lng]``
+    walk (ref utils/spatial.py:153-171) — explore_tabs → sections with
+    listings → listings — over a payload parsed with
+    ``schemas.SEARCH_PAYLOAD``. Each element is a struct of
+    (listing_id, lon, lat, host_id, city), in payload order; a NULL
+    ``explore_tabs`` or ``sections`` gives no elements."""
+    entries = F.flatten(
+        F.transform(
+            F.coalesce(payload["explore_tabs"], F.array()),
+            lambda t: F.flatten(
+                F.coalesce(
+                    F.transform(
+                        F.filter(t["sections"], lambda s: s["listings"].isNotNull()),
+                        lambda s: s["listings"],
+                    ),
+                    F.array(),
+                )
+            ),
         )
     )
-    return listings.withColumn("quadkey", lonlat_to_quadkey("lon", "lat", QK_DEPTH))
+    return F.transform(
+        entries,
+        lambda e: F.named_struct(
+            F.lit("listing_id"), e["listing"]["id"],
+            F.lit("lon"), e["listing"]["lng"],
+            F.lit("lat"), e["listing"]["lat"],
+            F.lit("host_id"), e["listing"]["user"]["id"],
+            F.lit("city"), e["listing"]["city"],
+        ),
+    )
+
+
+def search_tab_pagination(payload: Column) -> Column:
+    """X3: the first explore_tab's pagination struct (has_next_page,
+    items_offset, previous_page_items_offset) — the reference's
+    exactly-one-match reading (ref json_parsers.py:16-47)."""
+    return payload["explore_tabs"][0]["pagination_metadata"]
+
+
+def search_listings(responses: DataFrame, payload_col: str = "payload") -> DataFrame:
+    """X1: one row per listing of each search payload
+    (:func:`search_listings_array` exploded), with the engine's depth-22
+    quadkey bucketing column."""
+    p = _parsed(responses, schemas.SEARCH_PAYLOAD, payload_col)
+    return (
+        p.select("response_id", F.explode(search_listings_array(F.col("__p"))).alias("l"))
+        .select("response_id", "l.listing_id", "l.lon", "l.lat", "l.city", "l.host_id")
+        .withColumn("quadkey", lonlat_to_quadkey("lon", "lat", QK_DEPTH))
+    )
 
 
 def search_pagination(responses: DataFrame, payload_col: str = "payload") -> DataFrame:
@@ -54,13 +81,12 @@ def search_pagination(responses: DataFrame, payload_col: str = "payload") -> Dat
     the reference's parser — first explore_tab; ref json_parsers.py:16-47)."""
     p = _parsed(responses, schemas.SEARCH_PAYLOAD, payload_col)
     tab0 = F.col("__p.explore_tabs")[0]
+    page = search_tab_pagination(F.col("__p"))
     return p.select(
         "response_id",
-        tab0["pagination_metadata"]["has_next_page"].alias("has_next_page"),
-        tab0["pagination_metadata"]["items_offset"].alias("items_offset"),
-        tab0["pagination_metadata"]["previous_page_items_offset"].alias(
-            "previous_page_items_offset"
-        ),
+        page["has_next_page"].alias("has_next_page"),
+        page["items_offset"].alias("items_offset"),
+        page["previous_page_items_offset"].alias("previous_page_items_offset"),
         F.col("__p.metadata.federated_search_session_id").alias("search_session_id"),
         tab0["home_tab_metadata"]["listings_count"].alias("listings_count"),
         F.col("__p.metadata.geography.ne_lat").alias("ne_lat"),

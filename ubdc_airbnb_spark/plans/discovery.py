@@ -42,7 +42,7 @@ from pyspark.sql import functions as F
 from .. import schemas
 from ..functions.hashing import md5_long
 from ..functions.quadkey import lonlat_to_quadkey
-from ..operators.extract import QK_DEPTH
+from ..operators.extract import QK_DEPTH, search_listings_array, search_tab_pagination
 from ..sources.bronze import make_response_rows
 from ..sources.http_fetch import Fetcher, fetch_batch, materialize
 from ..sources.mock_api import MockAirbnbApi
@@ -119,17 +119,6 @@ def _wave_fetcher(
 
 _LISTING_COLS = "listing_id long, lon double, lat double, quadkey string, host_id long, city string"
 
-#: the X1 walk of ``operators.extract.search_listings`` (explore_tabs →
-#: sections with listings → listings) as one array per response instead
-#: of exploded rows, so a wave's parse is a single narrow projection
-_LISTINGS_ARRAY = """transform(
-    flatten(transform(coalesce(__p.explore_tabs, array()),
-        t -> flatten(coalesce(transform(filter(t.sections, s -> s.listings IS NOT NULL),
-                                        s -> s.listings), array())))),
-    e -> named_struct('listing_id', e.listing.id, 'lon', e.listing.lng,
-                      'lat', e.listing.lat, 'host_id', e.listing.user.id,
-                      'city', e.listing.city))"""
-
 
 def _parse_wave(bronze: DataFrame) -> DataFrame:
     """One row per response: request, status, pagination (X3) and the
@@ -137,7 +126,7 @@ def _parse_wave(bronze: DataFrame) -> DataFrame:
     their grid — but carry no pagination and no listings. ``n_listings``
     counts distinct non-NULL ids, as ``countDistinct`` did."""
     ok = F.col("was_successful")
-    tab0 = F.col("__p.explore_tabs")[0]["pagination_metadata"]
+    page = search_tab_pagination(F.col("__p"))
     ids = F.filter(F.transform("listings", lambda l: l["listing_id"]), lambda i: i.isNotNull())
     return (
         bronze.withColumn("__p", F.from_json("payload", schemas.SEARCH_PAYLOAD))
@@ -146,9 +135,9 @@ def _parse_wave(bronze: DataFrame) -> DataFrame:
             F.col("items_offset").alias("req_offset"),
             "status_code",
             "was_successful",
-            F.when(ok, tab0["has_next_page"]).alias("has_next_page"),
-            F.when(ok, tab0["items_offset"]).alias("next_offset"),
-            F.when(ok, F.expr(_LISTINGS_ARRAY)).alias("listings"),
+            F.when(ok, page["has_next_page"]).alias("has_next_page"),
+            F.when(ok, page["items_offset"]).alias("next_offset"),
+            F.when(ok, search_listings_array(F.col("__p"))).alias("listings"),
         )
         .withColumn("n_listings", F.when(ok, F.size(F.array_distinct(ids))).otherwise(0))
     )

@@ -49,8 +49,6 @@ def warm_cache(spark: SparkSession, sf_dir: str, partitions: int | None = None) 
     n = partitions or int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
 
     def materialize(name: str) -> DataFrame:
-        # a pool thread starts with no local properties: label its job
-        spark.sparkContext.setJobDescription(f"warm_cache {name}")
         df = load_table(spark, sf_dir, name, use_cache=False).repartition(n).cache()
         df.count()
         return df
