@@ -73,6 +73,24 @@ def test_release_pins_failure_is_loud_and_keeps_entry(spark, monkeypatch):
     assert len(_PINNED) == 0
 
 
+def test_pin_without_semantic_hash_raises_and_caches_nothing(spark, monkeypatch):
+    """A frame that cannot be registered must not be persisted either:
+    an unregistered pin is a cache entry release_pins() never frees."""
+    release_pins()
+    before = _persistent_rdd_count(spark)
+    df = spark.range(40).selectExpr("id", "id * 7 as v")
+
+    def _fail(self):
+        raise RuntimeError("semanticHash failed")
+
+    monkeypatch.setattr(type(df), "semanticHash", _fail)
+    with pytest.raises(RuntimeError, match="semanticHash failed"):
+        _pin(df)
+    assert not df.is_cached
+    assert len(_PINNED) == 0
+    assert _persistent_rdd_count(spark) == before
+
+
 def test_curation_rerun_gets_live_pins(spark):
     """Two back-to-back run_curation calls in one session: the second
     run's stage pins must be live (the first run's per-stage unpins must

@@ -42,6 +42,20 @@ def test_pagerank_partitioning_invariant(spark):
     assert a == b
 
 
+def test_pagerank_empty_graph(spark):
+    from ubdc_airbnb_spark.operators.graph import pagerank
+
+    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    out = pagerank(spark.createDataFrame([], "src long, dst long"))
+    assert out.collect() == []
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema.fields] == [
+        ("vertex", "bigint"),
+        ("rank", "double"),
+    ]
+    # the static graph chain is closed, so no checkpoint stays cached
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
+
+
 def test_scd2_intervals_collapse_and_close(spark):
     from ubdc_airbnb_spark.operators.scd import scd2_intervals
 

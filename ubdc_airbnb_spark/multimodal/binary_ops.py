@@ -295,7 +295,7 @@ def _ids_spread(ids: DataFrame) -> DataFrame:
     tasks' fixed overhead; unknown cardinality assumes fat (the safe
     direction at scale — at 100 TB inputs already arrive wider than
     cores and this is a no-op)."""
-    from ..operators.similarity import _approx_rows
+    from ..sources.tables import _approx_rows
 
     sc = ids.sparkSession.sparkContext
     cores = sc.defaultParallelism

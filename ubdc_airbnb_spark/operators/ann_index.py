@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
-from .similarity import assign_ivf_buckets, centroid_probes, cosine, kmeans_centroids
+from .similarity import assign_ivf_buckets, centroid_probes, cosine_cols, kmeans_centroids
 
 
 def build_ivf_index(
@@ -155,7 +155,7 @@ def query_ivf_index(
     scored = (
         bucket.join(broadcast(q), "centroid_id")
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cos", cosine(F.col("q_vec"), F.col("n_vec")))
+        .withColumn("cos", cosine_cols("q_vec", "n_vec"))
     )
     w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id").asc())
     return (

@@ -40,7 +40,7 @@ def _corpus_rows(df: DataFrame) -> int:
     stats rowCount. Any other shape (Filter, Join, ...) — where footer
     totals would be WRONG, not just approximate — falls back to an
     honest per-build count job."""
-    from .similarity import _footer_rows, _plan_stats_rows
+    from ..sources.tables import _footer_rows, _plan_stats_rows
 
     rows, stop = _plan_stats_rows(df)
     if rows is None and stop == "LogicalRelation":

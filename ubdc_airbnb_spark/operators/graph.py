@@ -21,6 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def connected_components(
@@ -190,7 +191,8 @@ def pagerank(
     is conserved instead of leaking (fixed round 4; the r1-r3 builds
     documented the leak as a simplification).
 
-    Output: (vertex, rank) for every vertex appearing as src or dst."""
+    Output: (vertex, rank) for every vertex appearing as src or dst;
+    an empty edge list gives an empty frame."""
     from .iterstate import CheckpointChain
 
     # materialize the STATIC graph tables once — without the checkpoint,
@@ -209,6 +211,17 @@ def pagerank(
         .distinct()
     )
     n = verts.count()
+    if n == 0:
+        static_chain.close()
+        return spark.createDataFrame(
+            [],
+            T.StructType(
+                [
+                    T.StructField("vertex", e.schema["src"].dataType),
+                    T.StructField("rank", T.DoubleType()),
+                ]
+            ),
+        )
     outdeg = static_chain.step(e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg")))
     rank_chain = CheckpointChain(spark)
     ranks = verts.withColumn("rank", F.lit(1.0 / n))

@@ -50,7 +50,7 @@ def bridge_join(
     streamed the 150k-row dim side (A/B best-of-5: 0.547 s auto vs
     0.365 s dim-build). When this arg is set, a dim whose
     source-cardinality estimate (parquet footers, falling back to
-    optimizer-stats rowCount — the r11 similarity-dispatch helper) is
+    optimizer-stats rowCount, ``sources.tables._approx_rows``) is
     KNOWN and below the row cap gets an explicit broadcast hint; an
     unknown or larger estimate falls through to planner choice, so at
     cluster scale where dims exceed the broadcast cap this is a no-op
@@ -60,7 +60,7 @@ def bridge_join(
     cardinality UPPER-BOUNDS the dim (for j9, the raw orders table
     bounds orders⋈customer, an FK join that cannot expand)."""
     if broadcast_dims_below is not None:
-        from .similarity import _approx_rows
+        from ..sources.tables import _approx_rows
 
         lrows = _approx_rows(left_sized_by if left_sized_by is not None else left)
         if lrows is not None and lrows < broadcast_dims_below:

@@ -95,21 +95,12 @@ def _pin(df: DataFrame) -> DataFrame:
     entries accumulate and compete with live pins for storage memory."""
     from pyspark.storagelevel import StorageLevel
 
-    try:
-        key = (id(df.sparkSession), df.semanticHash())
-    except Exception:
-        key = None
-    if key is not None:
-        cached = _PINNED.get(key)
-        if cached is not None:
-            try:
-                if cached.sameSemantics(df):
-                    return cached
-            except Exception:
-                pass
+    key = (id(df.sparkSession), df.semanticHash())
+    cached = _PINNED.get(key)
+    if cached is not None and cached.sameSemantics(df):
+        return cached
     df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    if key is not None:
-        _PINNED[key] = df
+    _PINNED[key] = df
     return df
 
 

@@ -2,15 +2,15 @@
 cosine top-k as the exact baseline, and an IVF (inverted-file) variant as
 the scale path.
 
-The cosine kernel is Arrow-vectorized (pandas_udf over numpy matrix
-ops, r10): the previous higher-order-function form (``zip_with`` +
-``aggregate``) is a sequential per-element fold that Catalyst
-interprets rather than codegens — measured 2.7x slower on the
-200k-score brute-force shape at sf1 (BENCH_NOTES r10). The HOF form
-survives as ``dot``/``norm``/``cosine_expr`` (the text twins the
-SQL-string call sites and the oracle replays use).
-Ranks/ids that gates output are invariant to the kernel's summation
-order (verified by the full 221-gate oracle run at the swap).
+One cosine kernel: the sequential higher-order-function fold
+(``zip_with`` + ``aggregate``) in :func:`dot` / :func:`norm`, with the
+Spark-SQL text twins :func:`dot_expr` / :func:`norm_expr` /
+:func:`cosine_expr` that the SQL-string call sites use. The fold sums
+left to right, the order the DuckDB oracle replays, so every cosine the
+engine produces -- an output float, a rank or a threshold membership --
+is bit-identical to the oracle's. Catalyst runs the fold interpreted
+(``ArrayAggregate`` and ``ArrayTransform`` are ``CodegenFallback``), and
+no Python worker is ever involved.
 
 Scale notes: brute force is O(n·q) dot products — fine when the query set
 is broadcastable. IVF turns it into O(n/k · q · probes) by bucketing both
@@ -22,8 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.functions import broadcast, pandas_udf
-from pyspark.sql.types import DoubleType
+from pyspark.sql.functions import broadcast
 
 from .windows import first_row_per_key
 
@@ -47,95 +46,20 @@ def norm(a: Column) -> Column:
     )
 
 
-def _cosine_batch(a, b):
-    """Arrow batch kernel: stack the batch into (n, dim) matrices and do
-    one einsum + two vectorized norms — ~2.7x the HOF fold's throughput.
-    Zero-norm rows produce NaN here (0/0); the Column wrapper maps NaN
-    to NULL to keep the engine-wide zero-norm contract (see cosine).
-
-    NaN-COMPONENT vectors are out of contract (r11, ADVICE): this path
-    cannot emit a true NaN result — pandas->Arrow serialization of a
-    float64 Series treats NaN as null — so a vector containing NaN
-    components yields NULL here, while the HOF fold yields NaN (which
-    Spark and DuckDB both order ABOVE every number in cos DESC). The
-    divergence is pinned by test_similarity_kernels.py; feed sanitized
-    embeddings (embedding_health / profile ops) if NaN can occur."""
-    import numpy as np
-    import pandas as pd
-
-    n = len(a)
-    if n == 0:
-        return pd.Series([], dtype="float64")
-    av = a.to_numpy()
-    bv = b.to_numpy()
-    try:
-        # fast path: the common case — no NULL rows, uniform dim.
-        # np.stack raises on None rows / ragged dims (and a batch whose
-        # two sides stacked to different shapes is caught explicitly).
-        A = np.stack(av).astype("float64", copy=False)
-        B = np.stack(bv).astype("float64", copy=False)
-        if A.ndim != 2 or A.shape != B.shape:
-            raise ValueError("non-uniform cosine batch")
-        num = np.einsum("ij,ij->i", A, B)
-        den = np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            out = num / den  # den == 0 -> nan (num is 0 there too)
-        return pd.Series(out)
-    except (ValueError, TypeError):
-        pass
-    # Fallback (r11, ADVICE): the batch has NULL rows or
-    # dimension-mismatched pairs. The HOF fold propagates NULL for such
-    # rows; this kernel must not crash the stage on them (one null
-    # vector in a 100 TB corpus would fail every caller). Mask the
-    # invalid rows to NaN (-> NULL via the Column wrapper) and stack
-    # the valid remainder per-dimension group — still one einsum per
-    # distinct dim, not per row.
-    out = np.full(n, np.nan, dtype="float64")
-    groups: dict = {}
-    for i in range(n):
-        x, y = av[i], bv[i]
-        if x is None or y is None:
-            continue
-        try:
-            lx, ly = len(x), len(y)
-        except TypeError:
-            continue
-        if lx != ly or lx == 0:
-            continue
-        groups.setdefault(lx, []).append(i)
-    for idxs in groups.values():
-        ii = np.asarray(idxs)
-        A = np.stack([np.asarray(av[i], dtype="float64") for i in idxs])
-        B = np.stack([np.asarray(bv[i], dtype="float64") for i in idxs])
-        num = np.einsum("ij,ij->i", A, B)
-        den = np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            out[ii] = num / den
-    return pd.Series(out)
-
-
-# a DataType instance (not a DDL string) keeps the module importable
-# with no active SparkSession — the string form parses DDL at import
-_cosine_udf = pandas_udf(_cosine_batch, DoubleType())
-
-
 def cosine(a: Column, b: Column) -> Column:
-    """NULL (not NaN, not an error) when either norm is zero: under
+    """Column form of :func:`cosine_expr`.
+
+    NULL (not NaN, not an error) when either norm is zero: under
     Spark 4's default ANSI mode a bare ``x / 0.0`` THROWS
-    DIVIDE_BY_ZERO — one all-zero embedding in a 100 TB corpus would
-    kill every cosine gate (caught by the r07 contraction edge-case
-    test). NULL fails every ``>= threshold`` predicate, so zero-norm
+    DIVIDE_BY_ZERO, so one all-zero embedding would kill every cosine
+    gate. NULL fails every ``>= threshold`` predicate, so zero-norm
     vectors are deterministically "similar to nothing" on every engine,
     instead of inheriting NaN's engine-specific comparison order (Spark
     treats NaN as GREATER than any number, which would make a zero-norm
-    vector similar to everything).
-
-    Vectorized path: the batch kernel yields NaN exactly on zero-norm
-    rows (0/0); the ``nanvl``+``nullif`` wrapper maps NaN to NULL.
-    Spark's ExtractPythonUDFs rule dedupes the two identical UDF
-    references into ONE Arrow evaluation."""
-    raw = _cosine_udf(a, b)
-    return F.when(F.isnan(raw), F.lit(None).cast("double")).otherwise(raw)
+    vector similar to everything). A NULL operand, a dimension mismatch
+    (``zip_with`` pads with NULL) and an empty array also give NULL; a
+    NaN component gives NaN, as in DuckDB."""
+    return dot(a, b) / F.nullif(norm(a) * norm(b), F.lit(0.0))
 
 
 def dot_expr(a_sql: str, b_sql: str) -> str:
@@ -168,119 +92,9 @@ def cosine_expr(a_sql: str, b_sql: str) -> str:
     )
 
 
-#: crossover for the kernel dispatch in :func:`cosine_cols`: below this
-#: many SOURCE rows the Arrow kernel's fixed per-query floor (python
-#: worker spin-up + Arrow (de)serialization, ~0.15-0.2 s on this host)
-#: exceeds its einsum throughput win over the interpreted HOF fold;
-#: above it the win grows with data (3.1x at sf1, BENCH_NOTES r10).
-#: Sized call sites at oracle-gate scale (sf0.01, 500-row embeddings)
-#: therefore run the HOF fold — which is bit-identical to the DuckDB
-#: oracle's sequential summation, removing last-ulp threshold
-#: sensitivity at gate scale as a side effect.
-VECTORIZED_MIN_ROWS = 10_000
-
-
-def _footer_rows(df: DataFrame):
-    """Source-cardinality estimate from parquet footers — metadata only,
-    no Spark job. ``inputFiles()`` walks the LOGICAL plan, so this works
-    on derived and warm-cached frames alike (the cache substitution
-    happens at physical planning). Returns None when any input is not a
-    local parquet file — callers then assume BIG and keep the
-    vectorized kernel, the safe direction at scale."""
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return None
-    if not files:
-        return None
-    from urllib.parse import unquote, urlparse
-
-    import pyarrow.parquet as pq
-
-    total = 0
-    for uri in files:
-        parsed = urlparse(uri)
-        if parsed.scheme not in ("file", ""):
-            return None
-        path = unquote(parsed.path)
-        try:
-            total += pq.ParquetFile(path).metadata.num_rows
-        except Exception:
-            return None
-    return total
-
-
-def _plan_stats_rows(df: DataFrame):
-    """Optimizer-stats row count — the estimate source for frames whose
-    file lineage is hidden behind a cache: a MATERIALIZED
-    InMemoryRelation (``warm_cache`` tables) reports its EXACT row
-    count, and a LocalRelation its literal length. The size-only stats
-    visitor drops rowCount at the first Project even though a
-    projection cannot change cardinality (r11: found via the fused
-    fixture stages, whose ``ids.select(id)`` over a cached table read
-    None and mis-classified a 5k-row input as BIG), so walk down
-    through row-preserving Project nodes until a rowCount appears.
-    Anything else (Filter, Join, Aggregate — genuinely cardinality-
-    changing) stops the walk.
-    No job is run: this reads driver-side plan statistics only.
-
-    Returns ``(rows, stop)``. ``rows`` is the stats row count or None.
-    When it is None, ``stop`` is the simple class name of the node the
-    walk ended at (None if the plan could not be read), so a caller can
-    tell a bare file relation from a cardinality-changing node."""
-    try:
-        plan = df._jdf.queryExecution().optimizedPlan()
-        for _ in range(32):
-            rc = plan.stats().rowCount()
-            if rc.isDefined():
-                return int(str(rc.get())), None
-            name = plan.getClass().getSimpleName()
-            if name != "Project":
-                return None, name
-            plan = plan.children().apply(0)
-    except Exception:
-        pass
-    return None, None
-
-
-def _approx_rows(df: DataFrame):
-    """Best-effort source-cardinality estimate, cheapest first: parquet
-    footers (scan-backed frames), then optimizer-stats rowCount
-    (cached / driver-local frames). None = unknown = assume BIG."""
-    rows = _footer_rows(df)
-    if rows is not None:
-        return rows
-    return _plan_stats_rows(df)[0]
-
-
-def cosine_cols(a_name: str, b_name: str, sized_by: DataFrame | None = None) -> Column:
-    """:func:`cosine` over two NAMED columns. Routes through the shared
-    kernel (vectorized, r10).
-
-    ``sized_by`` (r11): ORDERING/THRESHOLD-only call sites pass the
-    frame whose source cardinality should pick the kernel — the HOF
-    fold below :data:`VECTORIZED_MIN_ROWS` source rows (the Arrow
-    per-query floor dominates at toy scale), the einsum kernel at and
-    above it (the 100 TB-correct choice). Both kernels produce
-    identical ranks/threshold sets away from last-ulp ties
-    (test_similarity_kernels.py pins rank equality and the near-
-    threshold caveat); sites whose OUTPUT is the float itself must
-    call :func:`cosine_cols_exact` directly and never dispatch."""
-    if sized_by is not None:
-        rows = _approx_rows(sized_by)
-        if rows is not None and rows < VECTORIZED_MIN_ROWS:
-            return cosine_cols_exact(a_name, b_name)
-    return cosine(F.col(a_name), F.col(b_name))
-
-
-def cosine_cols_exact(a_name: str, b_name: str) -> Column:
-    """The sequential-fold HOF form, ALWAYS — for operators whose
-    OUTPUT column is the cosine value itself (embedding_outliers,
-    rp_lsh_query_topk): the oracle compares floats at full repr
-    precision, so an output float must reproduce the oracle's exact
-    left-to-right summation order. Operators that only ORDER or
-    THRESHOLD on the cosine use the vectorized kernel instead — their
-    id/rank outputs are invariant to last-ulp summation differences."""
+def cosine_cols(a_name: str, b_name: str) -> Column:
+    """:func:`cosine` over two NAMED columns, built from one parse of
+    :func:`cosine_expr`."""
     return F.expr(cosine_expr(f"`{a_name}`", f"`{b_name}`"))
 
 
@@ -305,7 +119,7 @@ def brute_force_topk(
     )
     scored = (
         v.join(broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cos", cosine_cols("q_vec", "n_vec", sized_by=vectors))
+        .withColumn("cos", cosine_cols("q_vec", "n_vec"))
     )
     from pyspark.sql import Window
 
@@ -326,23 +140,15 @@ def threshold_pairs(
     """All pairs (a < b) with cosine ≥ threshold — embedding near-dup
     detection. Exact all-pairs; at scale gate it behind IVF buckets.
 
-    Threshold membership is ulp-sensitive (r11, ADVICE): when the
-    vectorized kernel runs, a pair whose cosine lands within a few ulps
-    of ``threshold`` may flip relative to a sequential-fold engine —
-    the oracle-equality of every threshold gate is verified on the
-    actual datasets, i.e. empirical and data-dependent, not an
-    analytical invariant (unlike rank tie-breaks, which the
-    deterministic id ordering protects for exactly-equal scores).
-    test_similarity_kernels.py pins kernel == row-wise np.einsum at a
-    constructed near-threshold pair so a kernel/BLAS change fails the
-    suite instead of drifting the oracle. Same caveat applies to every
-    ``cosine >= threshold`` site (ivf_threshold_pairs, rp_lsh_pairs,
-    embedding_components)."""
+    Threshold membership is exact against the oracle: the cosine is the
+    same left-to-right fold DuckDB evaluates, so a pair whose cosine
+    equals ``threshold`` is included on both engines (pinned by
+    test_similarity_kernels.py against a Python left-to-right sum)."""
     a = vectors.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("vec_a"))
     b = vectors.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vec_b"))
     return (
         a.join(broadcast(b), F.col("id_a") < F.col("id_b"))
-        .withColumn("cos", cosine_cols("vec_a", "vec_b", sized_by=vectors))
+        .withColumn("cos", cosine_cols("vec_a", "vec_b"))
         .filter(F.col("cos") >= threshold)
         .select("id_a", "id_b")
     )
@@ -360,7 +166,7 @@ def assign_ivf_buckets(
     broadcast join + per-vector argmax. Centroid count is small (√n rule
     of thumb), so the broadcast never shuffles the corpus."""
     scored = vectors.join(broadcast(centroids)).withColumn(
-        "cos", cosine_cols(vec_col, centroid_vec, sized_by=vectors)
+        "cos", cosine_cols(vec_col, centroid_vec)
     )
     best = first_row_per_key(
         scored,
@@ -445,7 +251,13 @@ def centroid_probes(
             for r in sorted(rows, key=lambda r: int(r[0]))
         )
         src = vectors
-        cents_col = F.expr(f"array({cents_sql})")
+        # an empty array() is array<void>, which the struct access below
+        # rejects; zero centroids get the typed empty array instead
+        cents_col = F.expr(
+            f"array({cents_sql})"
+            if rows
+            else "CAST(array() AS array<struct<cid:bigint,cvec:array<double>>>)"
+        )
     else:
         cents_one = centroids.agg(
             F.array_sort(
@@ -533,7 +345,7 @@ def _expand_value_pairs(
     ≥1 surviving bucket — the rows the uncapped banded join would have
     generated (same semantics as ``dedup.minhash_lsh_pairs``)."""
     ok = vals.filter(
-        cosine_cols(vec_col, vec_col, sized_by=vals) >= F.lit(threshold)
+        cosine_cols(vec_col, vec_col) >= F.lit(threshold)
     ).select("__vid")
     if surviving is not None:
         ok = ok.join(surviving.hint("shuffle_hash"), "__vid", "semi")
@@ -589,7 +401,7 @@ def _ivf_value_pairs(
             b.hint("shuffle_hash"),
             (a["centroid_id"] == b["centroid_id"])
             & (F.col("vid_a") < F.col("vid_b"))
-            & (cosine_cols("vec_a", "vec_b", sized_by=vals) >= F.lit(threshold)),
+            & (cosine_cols("vec_a", "vec_b") >= F.lit(threshold)),
         )
         .select("vid_a", "vid_b")
         .distinct()  # pairs sharing >1 probe bucket — verified rows only
@@ -662,7 +474,7 @@ def embedding_components(
     )
     selfok = vals.select(
         "__vid",
-        (cosine_cols(vec_col, vec_col, sized_by=vals) >= F.lit(threshold)).alias("__selfok"),
+        (cosine_cols(vec_col, vec_col) >= F.lit(threshold)).alias("__selfok"),
     )
     return (
         members.join(comp.withColumnRenamed("id", "__vid").hint("shuffle_hash"), "__vid")
@@ -793,7 +605,7 @@ def rp_lsh_pairs(
             (a["band_id"] == b["band_id"])
             & (a["band_key"] == b["band_key"])
             & (F.col("vid_a") < F.col("vid_b"))
-            & (cosine_cols("vec_a", "vec_b", sized_by=vals) >= F.lit(threshold)),
+            & (cosine_cols("vec_a", "vec_b") >= F.lit(threshold)),
         )
         .select("vid_a", "vid_b")
         .distinct()
@@ -871,7 +683,7 @@ def kmeans_inertia(
     """Sum of (1 - cosine-to-assigned-centroid) — the objective the Lloyd
     loop should not increase (asserted in tests)."""
     scored = vectors.join(broadcast(centroids)).withColumn(
-        "cos", cosine_cols(vec_col, "centroid_vec", sized_by=vectors)
+        "cos", cosine_cols(vec_col, "centroid_vec")
     )
     best = first_row_per_key(scored, [id_col], [F.col("cos").desc(), F.col("centroid_id").asc()])
     return best.agg(F.sum(F.lit(1.0) - F.col("cos"))).collect()[0][0]
@@ -911,7 +723,7 @@ def ivf_topk(
     scored = (
         v.join(broadcast(q_bucketed), "centroid_id")
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cos", cosine_cols("q_vec", "n_vec", sized_by=vectors))
+        .withColumn("cos", cosine_cols("q_vec", "n_vec"))
     )
     from pyspark.sql import Window
 
@@ -1116,7 +928,7 @@ def pq_rerank_topk(
         .select(
             "query_id",
             "neighbor_id",
-            cosine_cols("__qv", "__nv", sized_by=vectors).alias("cos"),
+            cosine_cols("__qv", "__nv").alias("cos"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.col("neighbor_id"))
@@ -1179,7 +991,7 @@ def rp_lsh_query_topk(
         banded(cb, "neighbor_id", "cvec")
         .join(broadcast(banded(qb, "query_id", "qvec")), ["band_id", "band_key"])
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cos", cosine_cols_exact("qvec", "cvec"))
+        .withColumn("cos", cosine_cols("qvec", "cvec"))
         .select("query_id", "neighbor_id", "cos")
         .dropDuplicates(["query_id", "neighbor_id"])
     )
@@ -1210,10 +1022,8 @@ def embedding_outliers(
     is free on top of an index build.
 
     Output: (vec_id, centroid_id, cos, outlier)."""
-    # exact fold-order kernel: `cos` is an OUTPUT column here (see
-    # cosine_cols_exact) — the oracle compares it at full precision
     scored = vectors.join(broadcast(centroids)).withColumn(
-        "cos", cosine_cols_exact(vec_col, "centroid_vec")
+        "cos", cosine_cols(vec_col, "centroid_vec")
     )
     best = first_row_per_key(
         scored, [id_col], [F.col("cos").desc(), F.col("centroid_id").asc()]

@@ -110,3 +110,76 @@ def _ntz_to_ltz(spark: SparkSession, df: DataFrame) -> DataFrame:
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
+
+
+def _footer_rows(df: DataFrame):
+    """Source-cardinality estimate from parquet footers — metadata only,
+    no Spark job. ``inputFiles()`` walks the LOGICAL plan, so this works
+    on derived and warm-cached frames alike (the cache substitution
+    happens at physical planning). Returns None when any input is not a
+    local parquet file; callers then treat the frame as large, the safe
+    direction at scale."""
+    try:
+        files = df.inputFiles()
+    except Exception:
+        return None
+    if not files:
+        return None
+    from urllib.parse import unquote, urlparse
+
+    import pyarrow.parquet as pq
+
+    total = 0
+    for uri in files:
+        parsed = urlparse(uri)
+        if parsed.scheme not in ("file", ""):
+            return None
+        path = unquote(parsed.path)
+        try:
+            total += pq.ParquetFile(path).metadata.num_rows
+        except Exception:
+            return None
+    return total
+
+
+def _plan_stats_rows(df: DataFrame):
+    """Optimizer-stats row count — the estimate source for frames whose
+    file lineage is hidden behind a cache: a MATERIALIZED
+    InMemoryRelation (``warm_cache`` tables) reports its EXACT row
+    count, and a LocalRelation its literal length. The size-only stats
+    visitor drops rowCount at the first Project even though a
+    projection cannot change cardinality (r11: found via the fused
+    fixture stages, whose ``ids.select(id)`` over a cached table read
+    None and mis-classified a 5k-row input as BIG), so walk down
+    through row-preserving Project nodes until a rowCount appears.
+    Anything else (Filter, Join, Aggregate — genuinely cardinality-
+    changing) stops the walk.
+    No job is run: this reads driver-side plan statistics only.
+
+    Returns ``(rows, stop)``. ``rows`` is the stats row count or None.
+    When it is None, ``stop`` is the simple class name of the node the
+    walk ended at (None if the plan could not be read), so a caller can
+    tell a bare file relation from a cardinality-changing node."""
+    try:
+        plan = df._jdf.queryExecution().optimizedPlan()
+        for _ in range(32):
+            rc = plan.stats().rowCount()
+            if rc.isDefined():
+                return int(str(rc.get())), None
+            name = plan.getClass().getSimpleName()
+            if name != "Project":
+                return None, name
+            plan = plan.children().apply(0)
+    except Exception:
+        pass
+    return None, None
+
+
+def _approx_rows(df: DataFrame):
+    """Best-effort source-cardinality estimate, cheapest first: parquet
+    footers (scan-backed frames), then optimizer-stats rowCount
+    (cached / driver-local frames). None = unknown = assume BIG."""
+    rows = _footer_rows(df)
+    if rows is not None:
+        return rows
+    return _plan_stats_rows(df)[0]
