@@ -2,8 +2,11 @@
 
 from __future__ import annotations
 
+import glob
 import json
+import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from ubdc_airbnb_spark import cli
@@ -149,6 +152,20 @@ def test_cli_run_beat_job_pipeline(spark, tmp_path, capsys):
     assert {r._type for r in resp.select("_type").distinct().collect()} >= {
         "SRH", "CAL", "LST", "USR", "RVW", "BQT"
     }
+
+
+def test_beat_discover_raises_on_a_damaged_aoi_table(spark, tmp_path, capsys):
+    """A damaged AOI table is an error, not "no AOI filter": the scan
+    must not fall back to every grid. Only a table that was never written
+    reads as absent."""
+    wh = _seed_warehouse(tmp_path, "wh_damaged_aoi")
+    parts = glob.glob(os.path.join(wh, "aoi", "*.parquet"))
+    assert parts
+    for part in parts:
+        os.truncate(part, os.path.getsize(part) // 2)
+    with pytest.raises(Exception, match="(?i)parquet"):
+        cli.main(["--warehouse", wh, "run-beat-job", "op_discover_new_listings_periodical"])
+    assert "op_discover_new_listings_periodical" not in capsys.readouterr().out
 
 
 def test_cli_run_beat_job_args(spark, tmp_path, capsys):
@@ -363,3 +380,140 @@ def test_cli_report(spark, capsys):
     assert rc == 0
     out = capsys.readouterr().out
     assert "ns_source_balance_gini" in out and "gini" in out
+
+
+#: the seven beat ops in warehouse dependency order: each reads what the
+#: ones before it wrote
+_BEAT_ORDER = (
+    "op_discover_new_listings_periodical",
+    "op_estimate_listings_or_divide_periodical",
+    "op_update_calendar_periodical",
+    "op_update_listing_details_periodical",
+    "op_get_users_details_periodical",
+    "op_update_reviews_periodical",
+    "op_get_booking_detail_periodical",
+)
+
+#: the persisted bronze column list, the same for every op
+_BRONZE_COLUMNS = [
+    "response_id", "listing_id", "_type", "status_code", "payload", "url",
+    "seconds_to_complete", "created_at", "task_id", "was_successful",
+    "is_retriable",
+]
+
+#: per op, the persisted rows as (listing_id, _type, status_code, task_id,
+#: was_successful, is_retriable), sorted
+_BRONZE_ROWS = {
+    "op_discover_new_listings_periodical": [
+        (None, "SRH", 200, None, True, False),
+    ],
+    "op_estimate_listings_or_divide_periodical": [
+        (None, "SHM", 200, "031313131311", True, False),
+    ],
+    "op_update_calendar_periodical": [
+        (1713810, "CAL", 429, None, False, True),
+        (1892246, "CAL", 403, None, False, False),
+        (2499346, "CAL", 403, None, False, False),
+        (2734631, "CAL", 200, None, True, False),
+        (3463227, "CAL", 200, None, True, False),
+        (5469180, "CAL", 503, None, False, True),
+    ],
+    "op_update_listing_details_periodical": [
+        (1713810, "LST", 200, None, True, False),
+        (1892246, "LST", 403, None, False, False),
+        (2499346, "LST", 503, None, False, True),
+        (2734631, "LST", 503, None, False, True),
+        (3463227, "LST", 429, None, False, True),
+        (5469180, "LST", 503, None, False, True),
+    ],
+    "op_get_users_details_periodical": [
+        (611489, "USR", 200, None, True, False),
+        (925045, "USR", 200, None, True, False),
+    ],
+    "op_update_reviews_periodical": [
+        (1713810, "RVW", 200, None, True, False),
+        (1713810, "RVW", 200, None, True, False),
+        (1713810, "RVW", 200, None, True, False),
+        (1713810, "RVW", 503, None, False, True),
+        (1892246, "RVW", 200, None, True, False),
+        (1892246, "RVW", 200, None, True, False),
+        (1892246, "RVW", 403, None, False, False),
+        (1892246, "RVW", 503, None, False, True),
+        (2499346, "RVW", 429, None, False, True),
+        (2734631, "RVW", 200, None, True, False),
+        (2734631, "RVW", 200, None, True, False),
+        (2734631, "RVW", 429, None, False, True),
+        (2734631, "RVW", 429, None, False, True),
+        (3463227, "RVW", 200, None, True, False),
+        (3463227, "RVW", 200, None, True, False),
+        (3463227, "RVW", 200, None, True, False),
+        (3463227, "RVW", 200, None, True, False),
+        (5469180, "RVW", 200, None, True, False),
+        (5469180, "RVW", 200, None, True, False),
+        (5469180, "RVW", 200, None, True, False),
+        (5469180, "RVW", 429, None, False, True),
+    ],
+    "op_get_booking_detail_periodical": [
+        (2734631, "BQT", 503, None, False, True),
+        (3463227, "BQT", 429, None, False, True),
+    ],
+}
+
+
+def test_beat_ops_persist_one_bronze_format(spark, tmp_path, capsys, monkeypatch):
+    """Every beat op persists the same bronze columns, and per row the
+    same asset id, type tag, status routing and task id, whichever code
+    builds the rows. One small AOI tile, the deterministic mock source
+    and a fixed clock; ``response_id`` and ``created_at`` are not pinned."""
+    from functools import partial
+
+    from ubdc_airbnb_spark.plans import ops
+    from ubdc_airbnb_spark.sources import bronze
+
+    def fetcher(kind, key, offset):
+        # every status route, keyed by the request: 200, 403 (final, not
+        # JSON), 429/503 (retriable)
+        import zlib
+
+        from ubdc_airbnb_spark.sources.http_fetch import mock_fetcher
+
+        status = (200, 200, 403, 429, 503)[zlib.crc32(f"{kind}/{key}/{offset}".encode()) % 5]
+        if kind == "search" or status == 200:
+            return mock_fetcher(kind, key, offset)
+        return status, "<html>denied</html>" if status == 403 else "", f"mock://{kind}/{key}"
+
+    now = "TIMESTAMP '2024-06-01 00:00:00'"
+    for name in ("run_grid_estimate", "run_calendar_harvest", "run_listing_details",
+                 "run_user_update", "run_review_harvest", "run_booking_quotes"):
+        op = partial(getattr(ops, name), fetcher=fetcher, now_expr=now)
+        monkeypatch.setattr(ops, name, op)
+    written = []
+    write = bronze.partitioned_bronze_writer
+
+    def capture(df, path):
+        written.append((df.columns, sorted(
+            tuple(r) for r in df.select(
+                "listing_id", "_type", "status_code", "task_id",
+                "was_successful", "is_retriable",
+            ).collect()
+        )))
+        write(df, path)
+
+    monkeypatch.setattr(bronze, "partitioned_bronze_writer", capture)
+
+    wh = str(tmp_path / "wh_bronze")
+    west, south, east, north = geo.quadkey_bbox("031313131311")
+    dx, dy = (east - west) / 4, (north - south) / 4
+    wkt = geo.to_wkt(geo.bbox_to_polygon(west + dx, south + dy, east - dx, north - dy))
+    assert cli.main(
+        ["--warehouse", wh, "add-aoi", "--id", "1", "--name", "tile", "--wkt", wkt,
+         "--depth", "12", "--scan", "--calendars", "--details", "--reviews", "--bookings"]
+    ) == 0
+    for job in _BEAT_ORDER:
+        args = ["--warehouse", wh, "run-beat-job", job, "--arg", "how_many=6"]
+        assert cli.main(args) == 0, job
+    capsys.readouterr()
+    assert len(written) == len(_BEAT_ORDER)
+    for job, (cols, rows) in zip(_BEAT_ORDER, written):
+        assert cols == _BRONZE_COLUMNS, job
+        assert rows == _BRONZE_ROWS[job], job

@@ -1,10 +1,13 @@
 """Near-duplicate detection operators: sorted-neighborhood and SimHash
 pairs, cluster resolution, LSH bucket caps and the digest-contracted
-candidate generators against the naive compositions."""
+candidate generators against the naive compositions; LSH recall
+self-evaluation."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
+
+from ubdc_airbnb_spark.operators.dedup import lsh_recall_eval
 
 from conftest import SF_DIR
 
@@ -339,3 +342,46 @@ def test_digest_max_group_composition(spark):
         assert capped.filter("id_a = 100 and id_b = 101").count() == 1
     ex = exact_duplicates(docs, "doc_id", "text").filter(F.col("n_docs") > 1)
     assert {(r.keep_id, r.n_docs) for r in ex.collect()} == {(0, 40), (100, 2)}
+
+
+def test_lsh_recall_finds_exact_dups(spark):
+    text = "alpha beta gamma delta epsilon zeta eta theta"
+    rows = [(1, text), (2, text)]  # identical docs: jaccard 1, LSH must hit
+    rows += [(10 + i, f"totally different words number {i} here now") for i in range(5)]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    row = lsh_recall_eval(df, "doc_id", "text", threshold=0.3).collect()[0]
+    assert row.n_truth >= 1
+    assert row.n_hit >= 1  # identical signatures share every band
+    assert row.n_cand >= row.n_hit
+
+
+def test_lsh_recall_absolute_slice_bounded_and_nested(spark):
+    """sample_rows caps the quadratic truth branch at an ABSOLUTE doc
+    count regardless of corpus size, and a smaller target's slice is a
+    strict subset of a larger one's (hash-threshold nesting)."""
+    from ubdc_airbnb_spark.operators.sampling import _M, hash_bucket
+    from pyspark.sql import functions as F
+
+    rows = [(i, f"word{i} alpha beta gamma delta common tail {i % 7}") for i in range(200)]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+
+    def slice_ids(target):
+        thr = min(_M, (target * _M) // 200)
+        return {
+            r[0]
+            for r in df.filter(
+                hash_bucket(F.col("doc_id").cast("string"), "lshrecall") < thr
+            ).select("doc_id").collect()
+        }
+
+    small, big = slice_ids(40), slice_ids(120)
+    assert small <= big  # nesting: comparable metrics across corpus versions
+    assert 10 <= len(small) <= 80  # ~target, hash-jittered but bounded
+    # sample_rows >= corpus keeps everything (threshold clamps to _M)
+    row = lsh_recall_eval(
+        df, "doc_id", "text", threshold=0.3, sample_rows=10_000
+    ).collect()[0]
+    full = lsh_recall_eval(df, "doc_id", "text", threshold=0.3).collect()[0]
+    assert (row.n_truth, row.n_cand, row.n_hit) == (
+        full.n_truth, full.n_cand, full.n_hit,
+    )

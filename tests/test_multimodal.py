@@ -1,4 +1,5 @@
-"""Multimodal binary-column plumbing: schema, batch shape, determinism."""
+"""Multimodal binary-column plumbing: schema, batch shape, determinism;
+image dHash and audio fingerprints."""
 
 from __future__ import annotations
 
@@ -6,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ubdc_airbnb_spark.multimodal import binary_ops
+from ubdc_airbnb_spark.multimodal.binary_ops import image_dhash, synthetic_png_media
 from ubdc_airbnb_spark.sources.tables import load_table
 
 SF = "/root/testdata/sf0.001"
@@ -269,3 +271,44 @@ def test_ids_spread_leaves_thin_input_alone_and_spreads_fat(spark):
     fat = spark.range(0, 40_000).coalesce(1).selectExpr("id as doc_id")
     spread = _ids_spread(fat)
     assert spread.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+
+
+def test_image_dhash_equal_ids_mod_formula_collide(spark):
+    # the PNG fixture is a pure formula of the id, and the formula's
+    # geometry/channel/pixel cycle repeats with period lcm(9,7,3,256*...):
+    # identical payload bytes MUST give identical hashes; distinct
+    # geometries essentially never collide on all 64 bits
+    ids = spark.createDataFrame([(1,), (2,), (3,), (1,)], "doc_id long")
+    media = synthetic_png_media(ids)
+    got = {(r.media_id, r.dhash_hi, r.dhash_lo) for r in image_dhash(media).collect()}
+    by_id = {}
+    for mid, hi, lo in got:
+        by_id.setdefault(mid, set()).add((hi, lo))
+    assert all(len(v) == 1 for v in by_id.values())  # deterministic per id
+    assert by_id[1] != by_id[2]  # different images -> different hashes
+    hi, lo = next(iter(by_id[1]))
+    assert 0 <= hi < 2**32 and 0 <= lo < 2**32  # packed as 32-bit halves
+
+
+def test_image_dhash_is_an_equi_join_dedup_key(spark):
+    ids = spark.createDataFrame([(i,) for i in range(30)], "doc_id long")
+    hashes = image_dhash(synthetic_png_media(ids))
+    groups = hashes.groupBy("dhash_hi", "dhash_lo").agg(F.count("*").alias("n"))
+    # grouping by the hash partitions the corpus: group sizes sum to 30
+    assert sum(r.n for r in groups.collect()) == 30
+
+
+def test_audio_fingerprint_deterministic_and_discriminative(spark):
+    from ubdc_airbnb_spark.multimodal.binary_ops import (
+        audio_fingerprint,
+        synthetic_wav_media,
+    )
+
+    ids = spark.createDataFrame([(1,), (2,), (1,)], "doc_id long")
+    got = audio_fingerprint(synthetic_wav_media(ids), frame=8).collect()
+    by_id = {}
+    for r in got:
+        by_id.setdefault(r.media_id, set()).add((r.n_frames, r.fingerprint))
+    assert all(len(v) == 1 for v in by_id.values())  # same clip -> same fp
+    assert all(r.n_frames >= 3 for r in got)  # fixtures have >= 20 samples
+    assert all(r.fingerprint >= 0 for r in got)

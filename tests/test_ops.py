@@ -51,6 +51,28 @@ def test_calendar_harvest_advances_freshness(spark):
     assert res2.n_due == 0
 
 
+def test_response_ids_are_unique_across_runs(spark):
+    """Each fetch persists its own response: harvesting the same listings
+    on another day appends new ids, so the bridge rows of two runs never
+    point at one response; one run's ids are distinct, and a replay at
+    the same instant reproduces them."""
+    listings = spark.createDataFrame(
+        [(101, "02000", None), (102, "02001", None), (103, "02002", None)],
+        "listing_id long, quadkey string, calendar_updated_at timestamp",
+    )
+    covers = spark.createDataFrame([("02", True)], "qk_prefix string, collect_calendars boolean")
+
+    def ids(now):
+        res = ops.run_calendar_harvest(spark, listings, covers, now_expr=now)
+        return [r.response_id for r in res.bronze.select("response_id").collect()]
+
+    day1 = ids("TIMESTAMP '2024-03-01 02:00:00'")
+    day2 = ids("TIMESTAMP '2024-03-02 02:00:00'")
+    assert len(day1) == len(set(day1)) == 3
+    assert not set(day1) & set(day2)
+    assert sorted(ids("TIMESTAMP '2024-03-01 02:00:00'")) == sorted(day1)
+
+
 def test_grid_estimate_splits_dense_grids(spark):
     """ref operations/grids.py:56-84 — grids with estimate >= less_than
     split into 4 children; sparse grids get stamped estimates."""

@@ -97,3 +97,34 @@ def test_children_parent_ancestors(spark):
     assert got["0231"].p == "023"
     assert got["0231"].anc == ["0", "02", "023"]
     assert got["3"].anc == []
+
+
+def test_lonlat_to_quadkey_matches_python_codec_at_the_extremes(spark):
+    """Depth-22 keys of the one-parse SQL expression against geometry's
+    Python codec at the antimeridian, the Mercator latitude limit, the
+    poles and exact tile edges.
+
+    A longitude edge ``x / 2^22 * 360 - 180`` is exact in binary, so both
+    codecs must agree there bit for bit. A latitude edge is irrational:
+    its nearest double lies within an ulp of the edge, where
+    ``ln(tan + sec)`` (Spark) and ``asinh(tan)`` (Python) round
+    differently, so there the two may pick neighbouring rows — never
+    more — and must agree on the column."""
+    z = 22
+    n = 2**z
+    lons = [-180.0, 180.0] + [x / n * 360.0 - 180.0 for x in (0, 1, n // 2 - 1, n // 2, n - 1)]
+    lats = [-90.0, -85.051128779806589, -85.0511, 0.0, 0.5, 85.0511, 85.051128779806589, 90.0]
+    exact = [(lon, lat) for lon in lons for lat in lats]
+    rows = [1, 2, n // 4, n // 2 - 1, n // 2 + 1, 3 * n // 4, n - 2, n - 1]
+    edges = [(lon, geo.tile_bounds(0, y, z)[3]) for lon in lons for y in rows]
+    df = spark.createDataFrame(exact + edges, "lon double, lat double")
+    got = {
+        (r.lon, r.lat): r.q
+        for r in df.select("lon", "lat", qk.lonlat_to_quadkey("lon", "lat", z).alias("q")).collect()
+    }
+    for lon, lat in exact:
+        assert got[(lon, lat)] == geo.tile_to_quadkey(*geo._lonlat_tile(lon, lat, z), z), (lon, lat)
+    for lon, lat in edges:
+        gx, gy, _ = geo.quadkey_to_tile(got[(lon, lat)])
+        wx, wy = geo._lonlat_tile(lon, lat, z)
+        assert gx == wx and abs(gy - wy) <= 1, (lon, lat)

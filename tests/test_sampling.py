@@ -1,9 +1,12 @@
 """Sampling and mixture operators: upsampling, exact stratified
-samples, deterministic shuffles and temperature mixtures."""
+samples, deterministic shuffles, temperature and token-budget mixtures
+and the split-leakage audit."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
+
+from ubdc_airbnb_spark.operators.sampling import apply_mixture, split_leakage_report
 
 from conftest import SF_DIR
 
@@ -92,3 +95,58 @@ def test_temperature_mix_boosts_small_sources(spark):
     # determinism across partitionings
     again = temperature_mix(df.repartition(7), "src", "doc_id", target_fraction=0.5)
     assert sorted(r.doc_id for r in out.collect()) == sorted(r.doc_id for r in again.collect())
+
+
+def test_apply_mixture_respects_rates_and_is_deterministic(spark):
+    rows = [(i, "a" if i % 2 == 0 else "b") for i in range(200)]
+    df = spark.createDataFrame(rows, "doc_id long, grp string")
+    out1 = apply_mixture(df, ["grp"], "doc_id", budget=40)
+    out2 = apply_mixture(df, ["grp"], "doc_id", budget=40)
+    kept1 = sorted(r.doc_id for r in out1.collect())
+    kept2 = sorted(r.doc_id for r in out2.collect())
+    assert kept1 == kept2  # same keys every run
+    # two cells of 100 rows, budget 40 -> quota 20/cell, rate 0.2:
+    # hash-uniform drift around 20 per cell, never above the cell size
+    per = {r.grp: r.n for r in out1.groupBy("grp").agg(F.count("*").alias("n")).collect()}
+    assert set(per) <= {"a", "b"}
+    assert all(0 < n < 100 for n in per.values())
+
+
+def test_apply_mixture_rate_one_keeps_everything(spark):
+    df = spark.createDataFrame([(i, "g") for i in range(10)], "doc_id long, grp string")
+    out = apply_mixture(df, ["grp"], "doc_id", budget=1000)  # quota >> n -> rate 1.0
+    assert out.count() == 10
+
+
+def test_split_leakage_by_content_is_zero_and_by_doc_catches_dups(spark):
+    # 40 copies of the same text under different ids: with a 50/50 split
+    # the by-doc assignment splits the group with overwhelming probability
+    rows = [(i, "identical duplicated text") for i in range(40)]
+    rows += [(100 + i, f"unique text {i}") for i in range(10)]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    rep = {
+        r["mode"]: r
+        for r in split_leakage_report(
+            df, "doc_id", "text", weights=(("train", 0.5), ("test", 0.5))
+        ).collect()
+    }
+    assert rep["by_content"]["leaked_groups"] == 0
+    assert rep["by_content"]["docs_in_leaked"] == 0
+    assert rep["by_doc"]["n_dup_groups"] == 1
+    assert rep["by_doc"]["leaked_groups"] == 1  # 2^-39 chance of not leaking
+    assert rep["by_doc"]["docs_in_leaked"] == 40
+    assert rep["by_doc"]["n_groups"] == 11
+
+
+def test_mixture_rates_by_tokens_plans_in_token_units(spark):
+    from ubdc_airbnb_spark.operators.sampling import mixture_rates_by_tokens
+
+    rows = [(1, "big", 1000), (2, "big", 1000), (3, "small", 10), (4, "small", 10)]
+    df = spark.createDataFrame(rows, "doc_id long, grp string, n_tok long")
+    got = {r.grp: r for r in mixture_rates_by_tokens(df, ["grp"], "n_tok", budget=100).collect()}
+    # budget 100 tokens over 2 cells -> quota 50 each
+    assert got["big"].quota == 50 and got["small"].quota == 50
+    assert got["big"].tokens == 2000 and got["small"].tokens == 20
+    assert got["big"].rate == 50 / 2000.0  # few huge docs -> low row rate
+    assert got["small"].rate == 1.0  # under budget: keep everything
+    assert got["small"].expected == 20 and got["big"].expected == 50

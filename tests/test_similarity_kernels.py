@@ -10,8 +10,8 @@ The engine has one cosine kernel, the sequential ``zip_with`` +
 - no cosine call site plans a Python evaluation node, including the
   persisted-index serve path and frames whose size is unknown.
 
-Product quantization, the other ``similarity`` operator checked here,
-follows the kernel tests.
+Product quantization and group-centroid similarity, the other
+``similarity`` operators checked here, follow the kernel tests.
 """
 
 from __future__ import annotations
@@ -172,3 +172,21 @@ def test_pq_rerank_recall_vs_brute_force(spark):
     rr_recall = len(exact_set & rr_set) / len(exact_set)
     assert rr_recall >= 0.6, f"rerank recall {rr_recall}"
     assert rr_recall >= adc_recall, (rr_recall, adc_recall)
+
+
+def test_group_centroid_similarity_identical_groups_cos_one(spark):
+    from ubdc_airbnb_spark.operators.similarity import group_centroid_similarity
+
+    rows = [
+        (1, "a", [1.0, 0.0]), (2, "a", [1.0, 0.5]),
+        (3, "b", [1.0, 0.0]), (4, "b", [1.0, 0.5]),  # same centroid as a
+        (5, "c", [0.0, 1.0]), (6, "c", [0.0, 2.0]),  # orthogonal-ish
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, label string, embedding array<float>")
+    got = {
+        (r.label_a, r.label_b): r.cos
+        for r in group_centroid_similarity(df, "label").collect()
+    }
+    assert got[("a", "b")] == 1.0  # identical centroids
+    assert got[("a", "c")] < 0.5  # near-orthogonal centroids
+    assert set(got) == {("a", "b"), ("a", "c"), ("b", "c")}

@@ -1,11 +1,12 @@
 """Sketches: portable HLL accuracy, merge algebra and O(m) state;
-histogram quantiles, heavy hitters and KMV."""
+histogram quantiles, heavy hitters, KMV and median/MAD outlier counts."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from ubdc_airbnb_spark.operators import sketches
+from ubdc_airbnb_spark.operators.sketches import robust_outlier_counts
 
 
 def _est(df_one_row) -> float:
@@ -273,3 +274,13 @@ def test_kmv_intersection_accuracy(spark):
     row = sketches.kmv_intersection_estimate(sa, sb, k=256).collect()[0]
     assert abs(row.union_est - 4500) / 4500 < 0.25
     assert abs(row.intersection_est - 1500) / 1500 < 0.4  # Jaccard noise adds up
+
+
+def test_robust_outliers_flags_extremes_not_bulk(spark):
+    rows = [(i, "s", 100 + (i % 5)) for i in range(50)]  # tight bulk near 100
+    rows += [(900, "s", 10_000)]  # one extreme
+    df = spark.createDataFrame(rows, "doc_id long, source string, len long")
+    got = robust_outlier_counts(df, "len", "source", width=8.0, k=3).collect()
+    assert len(got) == 1
+    assert got[0].n_rows == 51
+    assert got[0].n_outliers == 1

@@ -1,6 +1,6 @@
 """Tests for the text-pipeline operators: sliding-window chunking,
 sequence packing, PII redaction, random-hyperplane LSH, corpus mixing,
-and token-budget curation."""
+token-budget curation and the Zipf slope."""
 
 from __future__ import annotations
 
@@ -231,3 +231,26 @@ def test_sequence_pack_budget_invariants(spark):
         assert r.pack_id == stream // 128
         assert r.pack_offset == stream % 128
         stream += r.n_tokens
+
+
+def test_zipf_slope_near_minus_one_for_zipfian_text(spark):
+    from ubdc_airbnb_spark.operators.tfidf import zipf_slope
+
+    # freq(rank r) = 120 // r for 12 word types: a discrete Zipf head
+    toks = []
+    for r in range(1, 13):
+        toks += [f"w{r:02d}"] * (120 // r)
+    df = spark.createDataFrame([(1, "z", " ".join(toks))], "doc_id long, source string, text string")
+    got = zipf_slope(df, "source", "text", max_rank=12).collect()[0]
+    assert got.n_ranks == 12
+    assert -1.15 < got.slope < -0.85  # near the natural-language ideal
+    assert got.slope == got.slope_num / got.slope_den  # ratio contract
+
+
+def test_zipf_slope_flat_for_uniform_template(spark):
+    from ubdc_airbnb_spark.operators.tfidf import zipf_slope
+
+    text = " ".join([f"tok{i}" for i in range(30)] * 5)  # every type freq 5
+    df = spark.createDataFrame([(1, "t", text)], "doc_id long, source string, text string")
+    got = zipf_slope(df, "source", "text", max_rank=30).collect()[0]
+    assert got.slope == 0.0  # constant y: templated feed, flat head

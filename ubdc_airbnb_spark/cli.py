@@ -13,6 +13,7 @@ import argparse
 import os
 import sys
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 
@@ -109,22 +110,12 @@ def cmd_discover(args) -> int:
     deployment)."""
     from .plans.discovery import discover
     from .sources.mock_api import MockAirbnbApi
-    from .operators.upsert import upsert_parquet
 
     spark = _spark()
     grids = spark.read.parquet(_table(args.warehouse, "grid"))
     seeds = [r.quadkey for r in grids.select("quadkey").collect()]
     res = discover(spark, MockAirbnbApi(), seeds, max_waves=args.max_waves)
-    upsert_parquet(
-        _conform_listings(res.listings.withColumn("created_at", F.current_timestamp())),
-        _table(args.warehouse, "listings"),
-        ["listing_id"],
-    )
-    from .sources.bronze import partitioned_bronze_writer
-
-    partitioned_bronze_writer(
-        res.bronze.drop("quadkey", "items_offset"), _table(args.warehouse, "responses")
-    )
+    _save_discovery(res, args.warehouse)
     print(
         f"waves={res.waves} fetches={res.fetches} splits={len(res.splits)} "
         f"listings={res.listings.count()}"
@@ -145,10 +136,15 @@ def _conform_listings(df):
 
 
 def _read_or_none(spark, warehouse: str, name: str):
+    """The warehouse table, or None when it was never written. Any other
+    read error (a damaged file, say) raises: a table that is there but
+    unreadable must not pass for an absent one."""
     try:
         return spark.read.parquet(_table(warehouse, name))
-    except Exception:
-        return None
+    except AnalysisException as e:
+        if e.getCondition() == "PATH_NOT_FOUND":
+            return None
+        raise
 
 
 def _users_or_empty(spark, warehouse: str):
@@ -161,13 +157,41 @@ def _users_or_empty(spark, warehouse: str):
 
 
 def _persist_bronze(bronze, warehouse: str) -> None:
+    """Append an op's bronze rows without the request columns that ride
+    along for the op's own joins."""
     from .sources.bronze import partitioned_bronze_writer
 
-    partitioned_bronze_writer(bronze, _table(warehouse, "responses"))
+    partitioned_bronze_writer(bronze.drop("key", "offset"), _table(warehouse, "responses"))
+
+
+def _save_discovery(res, warehouse: str) -> None:
+    from .operators.upsert import upsert_parquet
+
+    upsert_parquet(
+        _conform_listings(res.listings.withColumn("created_at", F.current_timestamp())),
+        _table(warehouse, "listings"),
+        ["listing_id"],
+    )
+    _persist_bronze(res.bronze, warehouse)
+
+
+def _save_calendar(res, warehouse: str) -> None:
+    from .operators.upsert import upsert_parquet
+
+    upsert_parquet(res.listings, _table(warehouse, "listings"), ["listing_id"])
+    upsert_parquet(res.calendar_days, _table(warehouse, "calendar_days"), ["listing_id", "date"])
+    _persist_bronze(res.bronze, warehouse)
+
+
+def _save_listing_details(res, warehouse: str) -> None:
+    from .operators.upsert import replace_parquet, upsert_parquet
+
+    upsert_parquet(res.listings, _table(warehouse, "listings"), ["listing_id"])
+    replace_parquet(res.users, _table(warehouse, "users"))
+    _persist_bronze(res.bronze, warehouse)
 
 
 def _beat_discover(spark, args, kw) -> str:
-    from .operators.upsert import upsert_parquet
     from .plans.discovery import discover
     from .sources.mock_api import MockAirbnbApi
 
@@ -185,12 +209,7 @@ def _beat_discover(spark, args, kw) -> str:
     res = discover(
         spark, MockAirbnbApi(), seeds, max_waves=int(kw.get("max_waves", 10))
     )
-    upsert_parquet(
-        _conform_listings(res.listings.withColumn("created_at", F.current_timestamp())),
-        _table(args.warehouse, "listings"),
-        ["listing_id"],
-    )
-    _persist_bronze(res.bronze.drop("quadkey", "items_offset"), args.warehouse)
+    _save_discovery(res, args.warehouse)
     return (
         f"waves={res.waves} fetches={res.fetches} splits={len(res.splits)} "
         f"listings={res.listings.count()}"
@@ -215,7 +234,6 @@ def _beat_estimate(spark, args, kw) -> str:
 
 
 def _beat_calendar(spark, args, kw) -> str:
-    from .operators.upsert import upsert_parquet
     from .plans.ops import run_calendar_harvest
     from .sources.aoi import covers_with_flags
 
@@ -224,13 +242,7 @@ def _beat_calendar(spark, args, kw) -> str:
     res = run_calendar_harvest(
         spark, listings, covers, how_many=int(kw.get("how_many", 500_000))
     )
-    upsert_parquet(res.listings, _table(args.warehouse, "listings"), ["listing_id"])
-    upsert_parquet(
-        res.calendar_days,
-        _table(args.warehouse, "calendar_days"),
-        ["listing_id", "date"],
-    )
-    _persist_bronze(res.bronze, args.warehouse)
+    _save_calendar(res, args.warehouse)
     return f"due={res.n_due} days={res.calendar_days.count()}"
 
 
@@ -266,7 +278,6 @@ def _beat_reviews(spark, args, kw) -> str:
 
 
 def _beat_listing_details(spark, args, kw) -> str:
-    from .operators.upsert import replace_parquet, upsert_parquet
     from .plans.ops import run_listing_details
     from .sources.aoi import covers_with_flags
 
@@ -276,9 +287,7 @@ def _beat_listing_details(spark, args, kw) -> str:
     res = run_listing_details(
         spark, listings, covers, users, how_many=int(kw.get("how_many", 500_000))
     )
-    upsert_parquet(res.listings, _table(args.warehouse, "listings"), ["listing_id"])
-    replace_parquet(res.users, _table(args.warehouse, "users"))
-    _persist_bronze(res.bronze, args.warehouse)
+    _save_listing_details(res, args.warehouse)
     return f"due={res.n_due} hosts={res.hosts.count()}"
 
 
@@ -351,8 +360,6 @@ def cmd_scrape_listing_data(args) -> int:
     the AOI scoping and staleness gate bypassed (``stale_only=False`` +
     a universal cover). Errors if the listing was never registered by a
     scan, like the reference's ``int_to_listing`` converter."""
-    from .operators.upsert import upsert_parquet
-
     spark = _spark()
     listings = spark.read.parquet(_table(args.warehouse, "listings"))
     one = listings.filter(F.col("listing_id") == args.listing_id)
@@ -367,23 +374,14 @@ def cmd_scrape_listing_data(args) -> int:
         from .plans.ops import run_calendar_harvest
 
         res = run_calendar_harvest(spark, one, cover, stale_only=False)
-        upsert_parquet(res.listings, _table(args.warehouse, "listings"), ["listing_id"])
-        upsert_parquet(
-            res.calendar_days,
-            _table(args.warehouse, "calendar_days"),
-            ["listing_id", "date"],
-        )
-        _persist_bronze(res.bronze, args.warehouse)
+        _save_calendar(res, args.warehouse)
         print(f"Fetched calendar for listing {args.listing_id}")
     else:
-        from .operators.upsert import replace_parquet
         from .plans.ops import run_listing_details
 
         users = _users_or_empty(spark, args.warehouse)
         res = run_listing_details(spark, one, cover, users, stale_only=False)
-        upsert_parquet(res.listings, _table(args.warehouse, "listings"), ["listing_id"])
-        replace_parquet(res.users, _table(args.warehouse, "users"))
-        _persist_bronze(res.bronze, args.warehouse)
+        _save_listing_details(res, args.warehouse)
         print(f"Fetched listing-details for listing {args.listing_id}")
     return 0
 
@@ -420,7 +418,6 @@ def cmd_run_due_jobs(args) -> int:
 def cmd_find_listings(args) -> int:
     """ref find-listings.py:17-32: scan ONE named grid for listings now.
     Errors (like the reference) if the grid is not registered."""
-    from .operators.upsert import upsert_parquet
     from .plans.discovery import discover
     from .sources.mock_api import MockAirbnbApi
 
@@ -434,12 +431,7 @@ def cmd_find_listings(args) -> int:
         )
         return 1
     res = discover(spark, MockAirbnbApi(), [args.quadkey], max_waves=args.max_waves)
-    upsert_parquet(
-        _conform_listings(res.listings.withColumn("created_at", F.current_timestamp())),
-        _table(args.warehouse, "listings"),
-        ["listing_id"],
-    )
-    _persist_bronze(res.bronze.drop("quadkey", "items_offset"), args.warehouse)
+    _save_discovery(res, args.warehouse)
     print(f"grid {args.quadkey}: fetches={res.fetches} listings={res.listings.count()}")
     return 0
 

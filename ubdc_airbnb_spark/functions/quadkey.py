@@ -33,33 +33,27 @@ def _shl(v: Column, bits: Column) -> Column:
     return F.call_function("shiftleft", v, bits.cast("int"))
 
 
-def tile_to_quadkey(x: Column | str, y: Column | str, z: Column | str | int) -> Column:
+def _quadkey_sql(x: str, y: str, z: int) -> str:
+    """The unrolled digit ``concat`` over two SQL tile expressions."""
+    terms = ", ".join(
+        f"CAST((shiftright({x}, {z - i}) & 1) + (shiftright({y}, {z - i}) & 1) * 2 AS STRING)"
+        for i in range(1, z + 1)
+    )
+    return f"concat({terms})"
+
+
+def tile_to_quadkey(x: str, y: str, z: Column | str | int) -> Column:
     """G1 encode: ``(tile_x, tile_y, zoom) -> quadkey`` string of length z.
 
     With a literal zoom the digit expressions are unrolled into one
-    ``concat`` (no array allocation, no lambda fold) — the hot path for
-    the depth-22 bucketing column over a full listing scan."""
-    if isinstance(z, int) and isinstance(x, str) and isinstance(y, str):
-        # name-typed fast path: assemble the unrolled digit concat as ONE
-        # SQL string (a single JVM parse) — building z digits as Column
-        # expressions costs ~6 py4j round-trips each (~0.2 s of pure
-        # driver latency at z=10, paid per query regardless of data size)
-        terms = ", ".join(
-            f"CAST((shiftright(`{x}`, {z - i}) & 1) + (shiftright(`{y}`, {z - i}) & 1) * 2 AS STRING)"
-            for i in range(1, z + 1)
-        )
-        return F.expr(f"concat({terms})")
-    x, y = _c(x), _c(y)
+    ``concat`` (no array allocation, no lambda fold), the same one
+    :func:`lonlat_to_quadkey` builds for the depth-22 bucketing column.
+    It is assembled as ONE SQL string (a single JVM parse): building z digits
+    as Column expressions costs ~6 py4j round-trips each (~0.2 s of pure
+    driver latency at z=10, paid per query regardless of data size)."""
     if isinstance(z, int):
-        digits = [
-            (
-                F.shiftright(x, z - i).bitwiseAND(F.lit(1))
-                + F.shiftright(y, z - i).bitwiseAND(F.lit(1)) * 2
-            ).cast("string")
-            for i in range(1, z + 1)
-        ]
-        return F.concat(*digits)
-    z = _c(z)
+        return F.expr(_quadkey_sql(f"`{x}`", f"`{y}`", z))
+    x, y, z = _c(x), _c(y), _c(z)
     digits = F.transform(
         F.sequence(F.lit(1), z),
         lambda i: (
@@ -167,10 +161,25 @@ def lonlat_to_tile_y(lat: Column | str, z: Column | str | int) -> Column:
     return F.least(F.greatest(y, F.lit(0).cast("long")), (n - 1).cast("long"))
 
 
-def lonlat_to_quadkey(lon: Column | str, lat: Column | str, z: int) -> Column:
+def lonlat_to_quadkey(lon: str, lat: str, z: int) -> Column:
     """Point → quadkey at depth z — the engine's spatial bucketing key
-    (drives the J1 spatial join and quadtree partitioning)."""
-    return tile_to_quadkey(lonlat_to_tile_x(lon, z), lonlat_to_tile_y(lat, z), z)
+    (drives the J1 spatial join and quadtree partitioning).
+
+    One SQL parse: the tile expressions are those of
+    :func:`lonlat_to_tile_x` / :func:`lonlat_to_tile_y`, written out with
+    double literals (a bare ``180.0`` in SQL is a DECIMAL), so the keys
+    are bit-identical to theirs."""
+    n = f"pow(2.0D, {float(z)!r}D)"
+    x = (
+        f"least(greatest(CAST(floor((`{lon}` + 180.0D) / 360.0D * {n}) AS BIGINT), 0L), "
+        f"CAST({n} - 1 AS BIGINT))"
+    )
+    lat_rad = f"radians(least(greatest(`{lat}`, -85.051128779806589D), 85.051128779806589D))"
+    y = (
+        f"least(greatest(CAST(floor((1.0D - ln(tan({lat_rad}) + 1.0D / cos({lat_rad})) "
+        f"/ 3.141592653589793D) / 2.0D * {n}) AS BIGINT), 0L), CAST({n} - 1 AS BIGINT))"
+    )
+    return F.expr(_quadkey_sql(x, y, z))
 
 
 def tile_bounds_west(x: Column | str, z: Column | str | int) -> Column:

@@ -40,23 +40,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import schemas
-from ..functions.hashing import md5_long
 from ..functions.quadkey import lonlat_to_quadkey
 from ..operators.extract import QK_DEPTH, search_listings_array, search_tab_pagination
-from ..sources.bronze import make_response_rows
-from ..sources.http_fetch import Fetcher, fetch_batch, materialize
+from ..sources.bronze import response_rows
+from ..sources.http_fetch import FETCH_RESULT_SCHEMA, Fetcher, fetch_batch, materialize
 from ..sources.mock_api import MockAirbnbApi
 
 MAX_GRID_LEVEL = 22  # ref core/settings.py:14
-
-
-def schemas_bronze_ddl() -> str:
-    return (
-        "response_id long, listing_id long, _type string, status_code int, "
-        "payload string, url string, seconds_to_complete int, created_at timestamp, "
-        "task_id string, was_successful boolean, is_retriable boolean, "
-        "quadkey string, items_offset int"
-    )
 
 
 @dataclass
@@ -131,8 +121,8 @@ def _parse_wave(bronze: DataFrame) -> DataFrame:
     return (
         bronze.withColumn("__p", F.from_json("payload", schemas.SEARCH_PAYLOAD))
         .select(
-            "quadkey",
-            F.col("items_offset").alias("req_offset"),
+            F.col("key").alias("quadkey"),
+            F.col("offset").alias("req_offset"),
             "status_code",
             "was_successful",
             F.when(ok, page["has_next_page"]).alias("has_next_page"),
@@ -198,8 +188,8 @@ def discover(
 
     Per wave, the whole frontier of (quadkey, items_offset) work items is
     fetched as one ``fetch_batch`` stage (Spark tasks, rate-limited per
-    partition) behind a ``materialize`` barrier; the bronze rows are
-    parsed once into a checkpoint of one row per response, and one
+    partition) whose bronze rows sit behind a ``materialize`` barrier;
+    they are parsed once into a checkpoint of one row per response, and one
     collect of its metadata drives the three-way branch per the
     reference (ref tasks.py:266-309):
 
@@ -230,26 +220,10 @@ def discover(
             "kind string, key string, offset long",
         )
         # one Spark stage fetches the whole wave; materialize = the fetch
-        # runs exactly once no matter how many consumers follow
-        fetched = materialize(
-            fetch_batch(work, fetcher, rate_per_sec=rate_per_sec, partitions=partitions)
-        )
-        raw = fetched.select(
-            md5_long(
-                F.concat_ws("#", F.lit(str(waves)), "kind", "key", "offset")
-            ).alias("response_id"),
-            F.lit(None).cast("long").alias("listing_id"),
-            F.lit("SRH").alias("_type"),
-            "status_code",
-            "body",
-            "url",
-            "seconds_to_complete",
-            F.current_timestamp().alias("created_at"),
-            F.lit(None).cast("string").alias("task_id"),
-            F.col("key").alias("quadkey"),
-            F.col("offset").cast("int").alias("items_offset"),
-        )
-        bronze = make_response_rows(raw, "quadkey", "items_offset")
+        # runs exactly once and the bronze rows (ids, timestamps) are
+        # fixed, no matter how many consumers follow
+        fetched = fetch_batch(work, fetcher, rate_per_sec=rate_per_sec, partitions=partitions)
+        bronze = materialize(response_rows(fetched, "SRH"))
         bronze_parts.append(bronze)
 
         # parse once: every later read of this wave starts here. The
@@ -298,7 +272,7 @@ def discover(
     if not bronze_parts:
         empty = spark.createDataFrame([], "quadkey string, estimated_listings long")
         return DiscoveryResult(
-            bronze=spark.createDataFrame([], schemas_bronze_ddl()),
+            bronze=response_rows(spark.createDataFrame([], FETCH_RESULT_SCHEMA), "SRH"),
             listings=spark.createDataFrame([], _LISTING_COLS),
             grids=empty,
         )

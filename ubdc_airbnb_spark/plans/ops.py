@@ -3,6 +3,11 @@ periodic operations, end to end (SURVEY §3.2; ref
 app/operations/calendars.py, grids.py). Each run is one batch job:
 due-selection → distributed rate-limited fetch → bronze append → silver
 extraction → freshness MERGE, all set-based.
+
+Every op turns its fetch results into bronze rows with the one builder,
+``sources.bronze.response_rows`` (row id = hash of the request and its
+``created_at``), behind its own ``materialize`` barrier; the freshness
+stamps are one keyed MERGE, :func:`_stamp`.
 """
 
 from __future__ import annotations
@@ -12,12 +17,18 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.hashing import md5_long
 from ..operators import extract
 from ..operators.upsert import insert_if_absent, upsert
-from ..sources.bronze import make_response_rows
+from ..sources.bronze import response_rows
 from ..sources.http_fetch import Fetcher, fetch_batch, materialize, mock_fetcher
 from . import harvest
+
+
+def _stamp(listings: DataFrame, ids: DataFrame, col: str, now_expr: str) -> DataFrame:
+    """Freshness MERGE: set ``col`` to now on the listings whose id is in
+    ``ids`` (one ``listing_id`` column; duplicates allowed)."""
+    touched = listings.join(ids.distinct(), "listing_id", "left_semi")
+    return upsert(listings, touched.withColumn(col, F.expr(now_expr)), ["listing_id"])
 
 
 @dataclass
@@ -61,28 +72,12 @@ def run_calendar_harvest(
         F.lit(0).cast("long").alias("offset"),
     )
     fetched = fetch_batch(work, fetcher, rate_per_sec=rate_per_sec)
-    raw = fetched.select(
-        md5_long(F.concat_ws("#", "kind", "key", "offset")).alias("response_id"),
-        F.col("key").cast("long").alias("listing_id"),
-        F.lit("CAL").alias("_type"),
-        "status_code",
-        "body",
-        "url",
-        "seconds_to_complete",
-        F.expr(now_expr).alias("created_at"),
-        F.lit(None).cast("string").alias("task_id"),
-    )
     # one-shot barrier: bronze fans out to days/stamps/bridge and the
     # returned frame — without it each action would re-run the HTTP stage
-    bronze = materialize(make_response_rows(raw))
+    bronze = materialize(response_rows(fetched, "CAL", now_expr))
     ok = bronze.filter(F.col("was_successful"))
     days = extract.calendar_days(ok)
-    stamped = upsert(
-        listings,
-        listings.join(ok.select("listing_id").distinct(), "listing_id", "left_semi")
-        .withColumn("calendar_updated_at", F.expr(now_expr)),
-        ["listing_id"],
-    )
+    stamped = _stamp(listings, ok.select("listing_id"), "calendar_updated_at", now_expr)
     bridge = ok.select("listing_id", "response_id")
     return CalendarHarvestResult(bronze, days, stamped, bridge, n_due)
 
@@ -132,22 +127,8 @@ def run_review_harvest(
         ),
         fetcher,
     )
-
-    def _bronze(fetched: DataFrame) -> DataFrame:
-        raw = fetched.select(
-            md5_long(F.concat_ws("#", "kind", "key", "offset")).alias("response_id"),
-            F.col("key").cast("long").alias("listing_id"),
-            F.lit("RVW").alias("_type"),
-            "status_code",
-            "body",
-            "url",
-            "seconds_to_complete",
-            F.expr(now_expr).alias("created_at"),
-            F.lit(None).cast("string").alias("task_id"),
-        )
-        return make_response_rows(raw)
-
-    bronze0 = materialize(_bronze(first_pages))  # page-1 fetch runs once
+    # page-1 fetch runs once
+    bronze0 = materialize(response_rows(first_pages, "RVW", now_expr))
     counts = extract.reviews_count(bronze0.filter(F.col("was_successful")))
     offsets = harvest.review_page_offsets(counts, page_size).filter(F.col("offset") > 0)
     rest = fetch_batch(
@@ -158,17 +139,12 @@ def run_review_harvest(
         ),
         fetcher,
     )
-    bronze = materialize(bronze0.unionByName(_bronze(rest)))
+    bronze = materialize(bronze0.unionByName(response_rows(rest, "RVW", now_expr)))
     n_pages = bronze.count()
     ok = bronze.filter(F.col("was_successful"))
     reviews = extract.review_rows(ok).dropDuplicates(["review_id"])
     users = extract.review_users(ok)
-    stamped = upsert(
-        listings,
-        listings.join(ok.select("listing_id").distinct(), "listing_id", "left_semi")
-        .withColumn("reviews_updated_at", F.expr(now_expr)),
-        ["listing_id"],
-    )
+    stamped = _stamp(listings, ok.select("listing_id"), "reviews_updated_at", now_expr)
     return ReviewHarvestResult(bronze, reviews, users, stamped, n_due, n_pages)
 
 
@@ -198,19 +174,7 @@ def run_booking_quotes(
         F.col("listing_id").cast("string").alias("key"),
         F.lit(0).cast("long").alias("offset"),
     )
-    fetched = fetch_batch(work, fetcher)
-    raw = fetched.select(
-        md5_long(F.concat_ws("#", "kind", "key", "offset")).alias("response_id"),
-        F.col("key").cast("long").alias("listing_id"),
-        F.lit("BQT").alias("_type"),
-        "status_code",
-        "body",
-        "url",
-        "seconds_to_complete",
-        F.expr(now_expr).alias("created_at"),
-        F.lit(None).cast("string").alias("task_id"),
-    )
-    bronze = materialize(make_response_rows(raw))
+    bronze = materialize(response_rows(fetch_batch(work, fetcher), "BQT", now_expr))
     return BookingQuoteResult(windows, bronze, bronze.count())
 
 
@@ -249,22 +213,12 @@ def run_grid_estimate(
     work = picked.select(
         F.lit("search").alias("kind"), F.col("quadkey").alias("key"), F.lit(0).cast("long").alias("offset")
     )
-    fetched = fetch_batch(work, fetcher)
-    raw = fetched.select(
-        md5_long(F.concat_ws("#", "kind", "key", "offset")).alias("response_id"),
-        F.lit(None).cast("long").alias("listing_id"),
-        F.lit("SHM").alias("_type"),
-        "status_code",
-        "body",
-        "url",
-        "seconds_to_complete",
-        F.expr(now_expr).alias("created_at"),
-        F.col("key").alias("task_id"),  # carry quadkey through
-    )
-    bronze = materialize(make_response_rows(raw))
+    # the persisted row names its grid in ``task_id``
+    rows = response_rows(fetch_batch(work, fetcher), "SHM", now_expr)
+    bronze = materialize(rows.withColumn("task_id", F.col("key")))
     counts = (
         extract.search_pagination(bronze.filter(F.col("was_successful")))
-        .join(bronze.select("response_id", F.col("task_id").alias("quadkey")), "response_id")
+        .join(bronze.select("response_id", F.col("key").alias("quadkey")), "response_id")
         .select("quadkey", F.coalesce("listings_count", F.lit(0)).alias("estimate"))
     )
     scanned = picked.join(counts, "quadkey", "left")
@@ -439,18 +393,7 @@ def run_listing_details(
         F.lit(0).cast("long").alias("offset"),
     )
     fetched = fetch_batch(work, fetcher, rate_per_sec=rate_per_sec)
-    raw = fetched.select(
-        md5_long(F.concat_ws("#", "kind", "key", "offset")).alias("response_id"),
-        F.col("key").cast("long").alias("listing_id"),
-        F.lit("LST").alias("_type"),
-        "status_code",
-        "body",
-        "url",
-        "seconds_to_complete",
-        F.expr(now_expr).alias("created_at"),
-        F.lit(None).cast("string").alias("task_id"),
-    )
-    bronze = materialize(make_response_rows(raw))
+    bronze = materialize(response_rows(fetched, "LST", now_expr))
     ok = bronze.filter(F.col("was_successful"))
     hosts = extract.listing_detail_hosts(ok)
     # one flag per host (a host may appear under several listings; any
@@ -471,15 +414,8 @@ def run_listing_details(
             ]
         )
     )
-    stamped = upsert(
-        listings,
-        listings.join(
-            bronze.filter(~F.col("is_retriable")).select("listing_id").distinct(),
-            "listing_id",
-            "left_semi",
-        ).withColumn("listing_updated_at", F.expr(now_expr)),
-        ["listing_id"],
-    )
+    attempted = bronze.filter(~F.col("is_retriable")).select("listing_id")
+    stamped = _stamp(listings, attempted, "listing_updated_at", now_expr)
     return ListingDetailsResult(bronze, hosts, users_out, stamped, n_due)
 
 
@@ -523,18 +459,7 @@ def run_user_update(
         F.lit(0).cast("long").alias("offset"),
     )
     fetched = fetch_batch(work, fetcher, rate_per_sec=rate_per_sec)
-    raw = fetched.select(
-        md5_long(F.concat_ws("#", "kind", "key", "offset")).alias("response_id"),
-        F.col("key").cast("long").alias("listing_id"),  # generic asset id slot
-        F.lit("USR").alias("_type"),
-        "status_code",
-        "body",
-        "url",
-        "seconds_to_complete",
-        F.expr(now_expr).alias("created_at"),
-        F.lit(None).cast("string").alias("task_id"),
-    )
-    bronze = materialize(make_response_rows(raw))
+    bronze = materialize(response_rows(fetched, "USR", now_expr))
     attempted = bronze.filter(~F.col("is_retriable")).select(
         F.col("listing_id").alias("user_id")
     )

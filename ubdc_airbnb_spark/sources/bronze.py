@@ -1,7 +1,14 @@
 """Bronze response sink (S11, X9, X10, T5 classification; ref
 app/managers.py:99-195 ``create_from_response``).
 
+One builder, :func:`response_rows`, turns every harvest op's fetch
+results into bronze rows, so the row format lives here only.
+
 Semantics reproduced:
+- every fetch gets its own row id: ``response_id`` hashes the request
+  (kind, key, offset) together with the row's ``created_at``, so a
+  request repeated in a later run (a daily calendar, a retried 429)
+  appends a new, distinct response instead of reusing an id;
 - JSON-decode the body; non-JSON bodies are encapsulated as
   ``{context_text, base64_str}`` (X10, ref managers.py:110-139);
 - NUL escapes stripped before store (X9, ref models.py:418-425);
@@ -15,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.hashing import md5_long
 from ..functions.jsonutils import sanitize_payload
 
 RETRIABLE_CODES = (429, 503)
@@ -50,6 +58,35 @@ def make_response_rows(df: DataFrame, *carry: str) -> DataFrame:
         F.col("status_code").isin(*RETRIABLE_CODES).alias("is_retriable"),  # T5
         *carry,
     )
+
+
+def response_rows(
+    fetched: DataFrame, _type: str, now_expr: str = "current_timestamp()"
+) -> DataFrame:
+    """Bronze rows of one fetch batch.
+
+    ``fetched`` is ``http_fetch.fetch_batch``'s output (kind, key,
+    offset, status_code, body, url, seconds_to_complete). The asset id
+    slot ``listing_id`` is the request key as a long — a listing or a
+    user id — and NULL for searches, whose key is a quadkey. The request
+    ``key`` and ``offset`` ride along after the bronze columns, for the
+    op's own joins; they are not persisted."""
+    stamped = fetched.withColumn("created_at", F.expr(now_expr))
+    request = F.concat_ws("#", "kind", "key", "offset", F.unix_micros("created_at"))
+    raw = stamped.select(
+        md5_long(request).alias("response_id"),
+        F.when(F.col("kind") != "search", F.col("key").cast("long")).alias("listing_id"),
+        F.lit(_type).alias("_type"),
+        "status_code",
+        "body",
+        "url",
+        "seconds_to_complete",
+        "created_at",
+        F.lit(None).cast("string").alias("task_id"),
+        "key",
+        "offset",
+    )
+    return make_response_rows(raw, "key", "offset")
 
 
 def partitioned_bronze_writer(df: DataFrame, path: str) -> None:
