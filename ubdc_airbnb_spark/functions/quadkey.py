@@ -141,45 +141,42 @@ def is_ancestor_of(qk_a: Column | str, qk_b: Column | str) -> Column:
     return b.startswith(a) & (F.length(b) > F.length(a))
 
 
-def lonlat_to_tile_x(lon: Column | str, z: Column | str | int) -> Column:
-    """Point → tile column (slippy formula): floor((lon+180)/360 * 2^z)."""
-    lon = _c(lon)
-    z = F.lit(z) if isinstance(z, int) else _c(z)
-    n = F.pow(F.lit(2.0), z.cast("double"))
-    x = F.floor((lon + F.lit(180.0)) / F.lit(360.0) * n).cast("long")
-    return F.least(F.greatest(x, F.lit(0).cast("long")), (n - 1).cast("long"))
+def _tile_x_sql(lon: str, z: int) -> str:
+    """Point → tile column (slippy formula): floor((lon+180)/360 * 2^z),
+    clamped to the grid. Double literals throughout: a bare ``180.0`` in
+    SQL text parses as a DECIMAL."""
+    n = f"pow(2.0D, {float(z)!r}D)"
+    return (
+        f"least(greatest(CAST(floor((`{lon}` + 180.0D) / 360.0D * {n}) AS BIGINT), 0L), "
+        f"CAST({n} - 1 AS BIGINT))"
+    )
 
 
-def lonlat_to_tile_y(lat: Column | str, z: Column | str | int) -> Column:
-    """floor((1 - asinh(tan(lat))/pi) / 2 * 2^z); lat clamped to Mercator."""
-    lat = _c(lat)
-    z = F.lit(z) if isinstance(z, int) else _c(z)
-    n = F.pow(F.lit(2.0), z.cast("double"))
-    lat_c = F.least(F.greatest(lat, F.lit(-85.051128779806589)), F.lit(85.051128779806589))
-    lat_rad = F.radians(lat_c)
-    y = F.floor((F.lit(1.0) - F.log(F.tan(lat_rad) + F.lit(1.0) / F.cos(lat_rad)) / F.lit(3.141592653589793)) / F.lit(2.0) * n).cast("long")
-    return F.least(F.greatest(y, F.lit(0).cast("long")), (n - 1).cast("long"))
+def _tile_y_sql(lat: str, z: int) -> str:
+    """floor((1 - asinh(tan(lat))/pi) / 2 * 2^z); lat clamped to Mercator,
+    asinh(tan) written as ln(tan + sec)."""
+    n = f"pow(2.0D, {float(z)!r}D)"
+    lat_rad = f"radians(least(greatest(`{lat}`, -85.051128779806589D), 85.051128779806589D))"
+    return (
+        f"least(greatest(CAST(floor((1.0D - ln(tan({lat_rad}) + 1.0D / cos({lat_rad})) "
+        f"/ 3.141592653589793D) / 2.0D * {n}) AS BIGINT), 0L), CAST({n} - 1 AS BIGINT))"
+    )
+
+
+def lonlat_to_tile_x(lon: str, z: int) -> Column:
+    return F.expr(_tile_x_sql(lon, z))
+
+
+def lonlat_to_tile_y(lat: str, z: int) -> Column:
+    return F.expr(_tile_y_sql(lat, z))
 
 
 def lonlat_to_quadkey(lon: str, lat: str, z: int) -> Column:
     """Point → quadkey at depth z — the engine's spatial bucketing key
-    (drives the J1 spatial join and quadtree partitioning).
-
-    One SQL parse: the tile expressions are those of
-    :func:`lonlat_to_tile_x` / :func:`lonlat_to_tile_y`, written out with
-    double literals (a bare ``180.0`` in SQL is a DECIMAL), so the keys
-    are bit-identical to theirs."""
-    n = f"pow(2.0D, {float(z)!r}D)"
-    x = (
-        f"least(greatest(CAST(floor((`{lon}` + 180.0D) / 360.0D * {n}) AS BIGINT), 0L), "
-        f"CAST({n} - 1 AS BIGINT))"
-    )
-    lat_rad = f"radians(least(greatest(`{lat}`, -85.051128779806589D), 85.051128779806589D))"
-    y = (
-        f"least(greatest(CAST(floor((1.0D - ln(tan({lat_rad}) + 1.0D / cos({lat_rad})) "
-        f"/ 3.141592653589793D) / 2.0D * {n}) AS BIGINT), 0L), CAST({n} - 1 AS BIGINT))"
-    )
-    return F.expr(_quadkey_sql(x, y, z))
+    (drives the J1 spatial join and quadtree partitioning). One SQL parse
+    over the same tile expressions :func:`lonlat_to_tile_x` /
+    :func:`lonlat_to_tile_y` return."""
+    return F.expr(_quadkey_sql(_tile_x_sql(lon, z), _tile_y_sql(lat, z), z))
 
 
 def tile_bounds_west(x: Column | str, z: Column | str | int) -> Column:

@@ -34,6 +34,7 @@ from __future__ import annotations
 import time
 from collections import Counter
 from dataclasses import dataclass, field
+from datetime import datetime, timezone
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -43,7 +44,7 @@ from .. import schemas
 from ..functions.quadkey import lonlat_to_quadkey
 from ..operators.extract import QK_DEPTH, search_listings_array, search_tab_pagination
 from ..sources.bronze import response_rows
-from ..sources.http_fetch import FETCH_RESULT_SCHEMA, Fetcher, fetch_batch, materialize
+from ..sources.http_fetch import Fetcher, fetch_batch, materialize
 from ..sources.mock_api import MockAirbnbApi
 
 MAX_GRID_LEVEL = 22  # ref core/settings.py:14
@@ -202,6 +203,7 @@ def discover(
     and returned checkpointed.
     """
     frontier: list[tuple[str, int]] = sorted((qk, 0) for qk in seed_quadkeys)
+    work_schema = "kind string, key string, offset long, created_at timestamp"
     bronze_parts: list[DataFrame] = []
     parsed_waves: list[DataFrame] = []
     grid_rows: dict[str, int] = {}  # quadkey -> estimated listings
@@ -215,9 +217,9 @@ def discover(
         fetches += len(frontier)
         fetcher = _wave_fetcher(source, frontier)
 
+        now = datetime.now(timezone.utc)  # the wave's created_at, as data
         work = spark.createDataFrame(
-            [("search", qk, offset) for qk, offset in frontier],
-            "kind string, key string, offset long",
+            [("search", qk, offset, now) for qk, offset in frontier], work_schema
         )
         # one Spark stage fetches the whole wave; materialize = the fetch
         # runs exactly once and the bronze rows (ids, timestamps) are
@@ -272,7 +274,7 @@ def discover(
     if not bronze_parts:
         empty = spark.createDataFrame([], "quadkey string, estimated_listings long")
         return DiscoveryResult(
-            bronze=response_rows(spark.createDataFrame([], FETCH_RESULT_SCHEMA), "SRH"),
+            bronze=response_rows(fetch_batch(spark.createDataFrame([], work_schema)), "SRH"),
             listings=spark.createDataFrame([], _LISTING_COLS),
             grids=empty,
         )

@@ -70,11 +70,12 @@ def run_calendar_harvest(
         F.lit("calendar").alias("kind"),
         F.col("listing_id").cast("string").alias("key"),
         F.lit(0).cast("long").alias("offset"),
+        F.expr(now_expr).alias("created_at"),
     )
     fetched = fetch_batch(work, fetcher, rate_per_sec=rate_per_sec)
     # one-shot barrier: bronze fans out to days/stamps/bridge and the
     # returned frame — without it each action would re-run the HTTP stage
-    bronze = materialize(response_rows(fetched, "CAL", now_expr))
+    bronze = materialize(response_rows(fetched, "CAL"))
     ok = bronze.filter(F.col("was_successful"))
     days = extract.calendar_days(ok)
     stamped = _stamp(listings, ok.select("listing_id"), "calendar_updated_at", now_expr)
@@ -124,11 +125,12 @@ def run_review_harvest(
             F.lit("reviews").alias("kind"),
             F.col("listing_id").cast("string").alias("key"),
             F.lit(0).cast("long").alias("offset"),
+            F.expr(now_expr).alias("created_at"),
         ),
         fetcher,
     )
     # page-1 fetch runs once
-    bronze0 = materialize(response_rows(first_pages, "RVW", now_expr))
+    bronze0 = materialize(response_rows(first_pages, "RVW"))
     counts = extract.reviews_count(bronze0.filter(F.col("was_successful")))
     offsets = harvest.review_page_offsets(counts, page_size).filter(F.col("offset") > 0)
     rest = fetch_batch(
@@ -136,10 +138,11 @@ def run_review_harvest(
             F.lit("reviews").alias("kind"),
             F.col("listing_id").cast("string").alias("key"),
             F.col("offset").cast("long").alias("offset"),
+            F.expr(now_expr).alias("created_at"),
         ),
         fetcher,
     )
-    bronze = materialize(bronze0.unionByName(response_rows(rest, "RVW", now_expr)))
+    bronze = materialize(bronze0.unionByName(response_rows(rest, "RVW")))
     n_pages = bronze.count()
     ok = bronze.filter(F.col("was_successful"))
     reviews = extract.review_rows(ok).dropDuplicates(["review_id"])
@@ -173,8 +176,9 @@ def run_booking_quotes(
         F.lit("listing").alias("kind"),
         F.col("listing_id").cast("string").alias("key"),
         F.lit(0).cast("long").alias("offset"),
+        F.expr(now_expr).alias("created_at"),
     )
-    bronze = materialize(response_rows(fetch_batch(work, fetcher), "BQT", now_expr))
+    bronze = materialize(response_rows(fetch_batch(work, fetcher), "BQT"))
     return BookingQuoteResult(windows, bronze, bronze.count())
 
 
@@ -211,10 +215,13 @@ def run_grid_estimate(
         how_many
     )
     work = picked.select(
-        F.lit("search").alias("kind"), F.col("quadkey").alias("key"), F.lit(0).cast("long").alias("offset")
+        F.lit("search").alias("kind"),
+        F.col("quadkey").alias("key"),
+        F.lit(0).cast("long").alias("offset"),
+        F.expr(now_expr).alias("created_at"),
     )
     # the persisted row names its grid in ``task_id``
-    rows = response_rows(fetch_batch(work, fetcher), "SHM", now_expr)
+    rows = response_rows(fetch_batch(work, fetcher), "SHM")
     bronze = materialize(rows.withColumn("task_id", F.col("key")))
     counts = (
         extract.search_pagination(bronze.filter(F.col("was_successful")))
@@ -391,9 +398,10 @@ def run_listing_details(
         F.lit("listing").alias("kind"),
         F.col("listing_id").cast("string").alias("key"),
         F.lit(0).cast("long").alias("offset"),
+        F.expr(now_expr).alias("created_at"),
     )
     fetched = fetch_batch(work, fetcher, rate_per_sec=rate_per_sec)
-    bronze = materialize(response_rows(fetched, "LST", now_expr))
+    bronze = materialize(response_rows(fetched, "LST"))
     ok = bronze.filter(F.col("was_successful"))
     hosts = extract.listing_detail_hosts(ok)
     # one flag per host (a host may appear under several listings; any
@@ -457,9 +465,10 @@ def run_user_update(
         F.lit("user").alias("kind"),
         F.col("user_id").cast("string").alias("key"),
         F.lit(0).cast("long").alias("offset"),
+        F.expr(now_expr).alias("created_at"),
     )
     fetched = fetch_batch(work, fetcher, rate_per_sec=rate_per_sec)
-    bronze = materialize(response_rows(fetched, "USR", now_expr))
+    bronze = materialize(response_rows(fetched, "USR"))
     attempted = bronze.filter(~F.col("is_retriable")).select(
         F.col("listing_id").alias("user_id")
     )

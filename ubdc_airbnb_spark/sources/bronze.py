@@ -60,20 +60,19 @@ def make_response_rows(df: DataFrame, *carry: str) -> DataFrame:
     )
 
 
-def response_rows(
-    fetched: DataFrame, _type: str, now_expr: str = "current_timestamp()"
-) -> DataFrame:
+def response_rows(fetched: DataFrame, _type: str) -> DataFrame:
     """Bronze rows of one fetch batch.
 
     ``fetched`` is ``http_fetch.fetch_batch``'s output (kind, key,
-    offset, status_code, body, url, seconds_to_complete). The asset id
-    slot ``listing_id`` is the request key as a long — a listing or a
-    user id — and NULL for searches, whose key is a quadkey. The request
-    ``key`` and ``offset`` ride along after the bronze columns, for the
-    op's own joins; they are not persisted."""
-    stamped = fetched.withColumn("created_at", F.expr(now_expr))
+    offset, status_code, body, url, seconds_to_complete) over work that
+    carried its ``created_at`` — as data, so the fetch stage's generated
+    code does not change from one run or discovery wave to the next. The
+    asset id slot ``listing_id`` is the request key as a long — a listing
+    or a user id — and NULL for searches, whose key is a quadkey. The
+    request ``key`` and ``offset`` ride along after the bronze columns,
+    for the op's own joins; they are not persisted."""
     request = F.concat_ws("#", "kind", "key", "offset", F.unix_micros("created_at"))
-    raw = stamped.select(
+    raw = fetched.select(
         md5_long(request).alias("response_id"),
         F.when(F.col("kind") != "search", F.col("key").cast("long")).alias("listing_id"),
         F.lit(_type).alias("_type"),

@@ -65,7 +65,8 @@ def fetch_batch(
     partitions: int | None = None,
 ) -> DataFrame:
     """Fetch every work item (columns: kind, key, offset) with bounded
-    per-partition request rate.
+    per-partition request rate. Any further work columns (the ops' and
+    discovery's ``created_at``) ride through to the result row as data.
 
     The work set is repartitioned so each partition is an independent
     rate-limited "worker"; total throughput = partitions × rate_per_sec,
@@ -79,6 +80,7 @@ def fetch_batch(
     (caught by the r07 pipeline smoke: a 20k-listing calendar harvest
     fetched and exploded 7.2M day rows in one task). Explicitly pass
     ``partitions`` to model a fixed worker fleet."""
+    carry = [f for f in work.schema if f.name not in ("kind", "key", "offset")]
     work = work.repartition(
         partitions or work.sparkSession.sparkContext.defaultParallelism
     )
@@ -87,7 +89,7 @@ def fetch_batch(
         min_interval = (1.0 / rate_per_sec) if rate_per_sec else 0.0
         last_request = 0.0
         for pdf in batches:
-            out = {k: [] for k in ("kind", "key", "offset", "status_code", "body", "url", "seconds_to_complete")}
+            out = {k: [] for k in ("status_code", "body", "url", "seconds_to_complete")}
             for kind, key, offset in zip(pdf["kind"], pdf["key"], pdf["offset"]):
                 if min_interval:
                     now = time.monotonic()
@@ -97,16 +99,13 @@ def fetch_batch(
                     last_request = time.monotonic()
                 t0 = time.monotonic()
                 status, body, url = fetcher(str(kind), str(key), int(offset))
-                out["kind"].append(kind)
-                out["key"].append(key)
-                out["offset"].append(int(offset))
                 out["status_code"].append(status)
                 out["body"].append(body)
                 out["url"].append(url)
                 out["seconds_to_complete"].append(int(time.monotonic() - t0))
-            yield pd.DataFrame(out)
+            yield pdf.assign(**out)
 
-    return work.select("kind", "key", "offset").mapInPandas(run, FETCH_RESULT_SCHEMA)
+    return work.mapInPandas(run, T.StructType(FETCH_RESULT_SCHEMA.fields + carry))
 
 
 def materialize(df: DataFrame) -> DataFrame:
